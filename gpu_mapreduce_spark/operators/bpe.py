@@ -33,10 +33,13 @@ downstream are one broadcast join (vocab is small by construction)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.plans.iterate import unpersist_checkpoint
+from gpu_mapreduce_spark.sources.tables import widen
 
 WORD_RE = "[a-z0-9]+"
 K_MERGES = 8
@@ -45,23 +48,12 @@ K_MERGES = 8
 _SY = "slice(split(s, ' '), 2, size(split(s, ' ')) - 1)"  # symbols array
 
 
-def _wide(df: DataFrame) -> DataFrame:
-    """Widen a corpus frame to full parallelism before a compute-bound
-    tokenize pass (r15; the queries/textstats._wide discipline, local
-    copy to keep the operators→queries layering clean): the documents
-    parquet arrives in ONE input split at test scale, so tokenization
-    otherwise runs single-task — measured 10.9-12.2 s serial at the 10x
-    scale point for the encode paths. No pushdown lost: these passes
-    read every row."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
 def word_tables(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(docw, words): per-doc word counts (doc_id, word, n) and the initial
     weighted symbol table (word, wt, s) with s = one char per symbol.
     docw is eagerly checkpointed — it feeds both the word fold and the
     final per-doc token-count join."""
-    toks = _wide(docs).select(
+    toks = widen(docs).select(
         "doc_id",
         F.explode(
             F.regexp_extract_all(F.lower(F.col("text")), F.lit(WORD_RE), 0)
@@ -121,8 +113,11 @@ def apply_merge(words: DataFrame, a: str, b: str) -> DataFrame:
     py4j round-trips per call and this runs once per round per train plus
     K times per encode. Tokens are [a-z0-9]+ by construction (WORD_RE,
     closed under concatenation), so embedding them in single-quoted SQL
-    literals needs no escaping — asserted below, never assumed."""
-    assert a.isalnum() and b.isalnum(), (a, b)  # SQL-literal safety
+    literals needs no escaping — checked below, never assumed (a raise,
+    not an assert, so it holds under ``python -O``; str.isalnum would also
+    pass non-ASCII letters)."""
+    if not (re.fullmatch(WORD_RE, a) and re.fullmatch(WORD_RE, b)):
+        raise ValueError(f"apply_merge: tokens must match {WORD_RE}: {(a, b)!r}")
     fold = F.expr(
         f"aggregate(transform({_SY}, t -> ' ' || t), '',"
         f" (acc, x) -> CASE WHEN endswith(acc, ' {a}') AND x = ' {b}'"
@@ -212,7 +207,7 @@ def encode_with_merges(
     the doc-keyed digest aggregate. At 100 TB the vocab join IS how a
     tokenizer service ships its trie — swap the broadcast table for the
     real tokenizer's Arrow UDF without changing the plan."""
-    toks = _wide(docs).select(
+    toks = widen(docs).select(
         "doc_id",
         F.posexplode(
             F.regexp_extract_all(F.lower(F.col("text")), F.lit(WORD_RE), 0)
@@ -258,7 +253,7 @@ def encode_pair_with_merges(
     n_new, dg_new) — bit-identical to the joined two-pass form: pos is
     unique per doc, so the shared array_sort orders exactly as each
     per-encode sort did."""
-    toks = _wide(docs).select(
+    toks = widen(docs).select(
         "doc_id",
         F.posexplode(
             F.regexp_extract_all(F.lower(F.col("text")), F.lit(WORD_RE), 0)
@@ -330,7 +325,7 @@ def fertility_units(
     encode_with_merges: one corpus token pass, one broadcast vocab join,
     one doc-keyed aggregate. Documents with no tokens emit no row (their
     fertility is undefined)."""
-    toks = _wide(docs).select(
+    toks = widen(docs).select(
         "doc_id",
         *carry,
         F.explode(

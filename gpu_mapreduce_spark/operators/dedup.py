@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.operators.textstats import tokens
+from gpu_mapreduce_spark.sources.tables import widen
 
 
 def _norm(text: Column) -> Column:
@@ -180,10 +181,7 @@ def jaccard_pairs(
         # input splits, which would strand the compute-bound shingle build
         # AND every post-checkpoint hash pass on as many cores (SCALE.md
         # checkpoint hygiene)
-        corpus = corpus.repartition(
-            corpus.sparkSession.sparkContext.defaultParallelism
-        )
-        shingles = shingle_set(corpus, k).localCheckpoint(eager=True)
+        shingles = shingle_set(widen(corpus), k).localCheckpoint(eager=True)
     sh = shingles
     freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("f"))
     ordered = (
@@ -356,7 +354,7 @@ def minhash_lsh_pairs(
     # widen before shingling: a small parquet corpus arrives in 2-3 input
     # splits, which would strand the compute-bound shingle build AND every
     # post-checkpoint hash pass on as many cores (SCALE.md checkpoint hygiene)
-    corpus = corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
+    corpus = widen(corpus)
     # materialize the shingle arrays FIRST and derive everything downstream
     # from the stored column: every later expression that names `shs` inline
     # would re-evaluate the whole tokenize+zip_with build per use (no

@@ -153,7 +153,7 @@ def oriented_adj(edges: DataFrame) -> DataFrame:
     )
 
 
-def _adj_intersections(adj: DataFrame, broadcast_adj: bool = True) -> DataFrame:
+def _adj_intersections(adj: DataFrame) -> DataFrame:
     """Per oriented edge (lo, hi): intersect N+(lo) with N+(hi) →
     (lo, hi, common ARRAY<BIGINT>).
 
@@ -161,16 +161,9 @@ def _adj_intersections(adj: DataFrame, broadcast_adj: bool = True) -> DataFrame:
     row fans out to one row per out-edge CARRYING its own nbrs array, so
     N+(lo) needs no join at all — only N+(hi) is looked up, via one broadcast
     hash join (|V| rows of packed arrays). Explode, join and intersect
-    pipeline in a single stage with no shuffle.
-
-    ``broadcast_adj=False`` is the beyond-broadcast-|V| form: the same join
-    runs key-partitioned as a SHUFFLE_HASH join — the |E|-row probe and the
-    |V|-row adjacency each shuffle ONCE on the vertex key and nothing is
-    replicated to every executor (row-identical both ways;
-    tests/test_graph_algorithms.py asserts both plans). The hint matters in
-    that mode too: unhinted, a sort-merge join would sort the |E| exploded
-    probe rows for no benefit — the adjacency side is the natural hash build
-    side at any scale.
+    pipeline in a single stage with no shuffle. The adjacency is always the
+    broadcast side and the probe never moves; a shuffle-hash variant for |V|
+    beyond broadcast range was removed unused (git history holds it).
 
     The probe is explicitly re-widened to full parallelism first: AQE
     coalesces the upstream groupBy's output by BYTES, and |V| array rows land
@@ -184,8 +177,9 @@ def _adj_intersections(adj: DataFrame, broadcast_adj: bool = True) -> DataFrame:
         F.col("nbrs").alias("a_nbrs"),
         F.explode("nbrs").alias("hi"),
     )
-    b = adj.select(F.col("v").alias("bv"), F.col("nbrs").alias("b_nbrs"))
-    b = F.broadcast(b) if broadcast_adj else b.hint("shuffle_hash")
+    b = F.broadcast(
+        adj.select(F.col("v").alias("bv"), F.col("nbrs").alias("b_nbrs"))
+    )
     return probe.join(b, probe.hi == F.col("bv")).select(
         "lo", "hi", F.array_intersect("a_nbrs", "b_nbrs").alias("common")
     )
@@ -194,7 +188,6 @@ def _adj_intersections(adj: DataFrame, broadcast_adj: bool = True) -> DataFrame:
 def tri_find(
     edges: DataFrame | None = None,
     adj: DataFrame | None = None,
-    broadcast_adj: bool = True,
 ) -> DataFrame:
     """Triangle enumeration (oink/tri_find.cpp:43-82, Cohen's algorithm).
 
@@ -214,15 +207,12 @@ def tri_find(
     Pass `adj` (a materialized `oriented_adj`) to amortize the build across
     triangle queries; with only `edges` the adjacency is checkpointed for
     the duration of this query (it is referenced twice).
-    ``broadcast_adj=False`` switches the per-edge lookup to the
-    key-partitioned shuffle-hash form for when |V| outgrows broadcast range
-    (see _adj_intersections).
 
     Output: one row per triangle as the sorted vertex triple (a < b < c).
     """
     if adj is None:
         adj = oriented_adj(edges).localCheckpoint(eager=True)
-    tri = _adj_intersections(adj, broadcast_adj).select(
+    tri = _adj_intersections(adj).select(
         "lo", "hi", F.explode("common").alias("w")
     )
     return tri.select(
@@ -235,16 +225,14 @@ def tri_find(
 def tri_count(
     edges: DataFrame | None = None,
     adj: DataFrame | None = None,
-    broadcast_adj: bool = True,
 ) -> DataFrame:
     """Triangle count without materializing triangles: sum of per-edge
     intersection sizes (the count the reference prints,
-    oink/tri_find.cpp:77-79) — skips tri_find's explode entirely.
-    ``broadcast_adj`` as in tri_find."""
+    oink/tri_find.cpp:77-79) — skips tri_find's explode entirely."""
     if adj is None:
         adj = oriented_adj(edges).localCheckpoint(eager=True)
     return (
-        _adj_intersections(adj, broadcast_adj)
+        _adj_intersections(adj)
         .select(F.size("common").alias("n"))
         .agg(F.sum("n").alias("ntri"))
     )

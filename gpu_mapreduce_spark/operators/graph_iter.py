@@ -18,21 +18,15 @@ only approximates with seeds (SURVEY.md §5).
 
 Scale notes: per iteration each algorithm is one join of the vertex state
 (labels/frontier/ranks) against the checkpointed arc list plus one
-partially-aggregated groupBy. The vertex-state side is explicitly broadcast
-by default: without the hint Spark broadcasts the ARC side (LogicalRDD
-stats undercount it), rebuilding a |E|-row broadcast every round — measured
-2-5 s/round at sf0.1 vs ~0.5 s with the state broadcast, and the arc list
-never moves at all. When |V| itself outgrows broadcast range (billions of
-vertices at 100 TB), pass ``broadcast_state=False`` together with
-``arcs=prepare_arcs_bucketed(...)`` (pagerank:
-``prepare_arcs_deg_bucketed``): the arc table is then a parquet table
-BUCKETED BY src at rest, whose scan reports HashPartitioning(src) to the
-planner, and the state side carries a SHUFFLE_HASH hint — so each round the
-O(|V|) state shuffles to the arcs' bucketing while the O(|E|) arc side
-never moves and nothing is broadcast. Both paths share the identical loop
-and produce bit-identical results (tests/test_graph_algorithms.py runs
-cc_find/pagerank/luby_find both ways and asserts the bucketed plan joins
-without a broadcast and without an arc-side exchange). min/sum are
+partially-aggregated groupBy. There is one join strategy: the state is
+broadcast and the arcs never move. The arc list is bidirected, hash-
+partitioned by dst and checkpointed once (prepare_arcs / prepare_warcs /
+prepare_arcs_deg); every state join wraps the O(|V|) side in an explicit
+F.broadcast. Without the hint Spark broadcasts the ARC side (LogicalRDD
+stats undercount it), rebuilding a |E|-row broadcast every round —
+measured 2-5 s/round at sf0.1 vs ~0.5 s with the state broadcast. A
+bucketed-by-src, shuffle-hash variant for |V| beyond broadcast range
+existed and was removed unused; git history holds it. min/sum are
 algebraic → map-side combine bounds hot vertices; the reference needed
 hand-rolled zone splitting for exactly this (oink/cc_find.cpp:43-55). AQE
 skew-join covers the rest.
@@ -107,119 +101,15 @@ def prepare_arcs_deg(edges: DataFrame) -> tuple[DataFrame, int]:
     return arcs_deg, n
 
 
-_BUCKETED_ARCS: dict[tuple[str, str], DataFrame] = {}
-
-
-def _bucketed_by_src(df: DataFrame, tag: str, nbuckets: int) -> DataFrame:
-    """Write an arc-shaped table (src, dst, ...) as a parquet table BUCKETED
-    BY src — the at-rest layout of the no-broadcast iterative path. The
-    bucketed scan reports HashPartitioning(src, nbuckets), so a
-    shuffle-hash state join needs no exchange on the arc side: per round
-    only the O(|V|) state moves. Written once per (session, tag, input plan)
-    into a temp warehouse dir (on a cluster: written once at ingest).
-
-    The memo key AND the catalog table name both fold in the input's
-    canonicalized-plan hash: `tag` alone is not an identity — two different
-    edge sets (e.g. two sf dirs) passing the same tag in one session would
-    otherwise silently share one bucketed table (and a name-only overwrite
-    would flip earlier handles onto the later data)."""
-    import hashlib
-    import tempfile
-
-    spark = df.sparkSession
-    # Identity = 32-bit semanticHash (hash of the canonicalized plan TREE,
-    # including in-memory relation data that no toString prints) PLUS a
-    # 64-bit md5 of the canonicalized plan TEXT (scan paths, filters,
-    # structure). Either alone under-keys: text misses LocalRelation data,
-    # the bare 32-bit hash is birthday-collidable between two edge sets
-    # sharing a tag — the silent-aliasing failure this key exists to
-    # prevent (review note r05).
-    canon = df._jdf.queryExecution().analyzed().canonicalized().toString()
-    plan_id = (
-        f"{df.semanticHash() & 0xFFFFFFFF:08x}"
-        f"{hashlib.md5(canon.encode()).hexdigest()[:16]}"
-    )
-    tbl = f"arcs_by_src_{tag}_{nbuckets}_{plan_id}"
-    key = (spark.sparkContext.applicationId, tbl)
-    if key not in _BUCKETED_ARCS:
-        path = tempfile.mkdtemp(prefix=f"{tbl}_")
-        (
-            df.write.format("parquet")
-            .bucketBy(nbuckets, "src")
-            .sortBy("src")
-            .mode("overwrite")
-            .option("path", f"{path}/{tbl}")
-            .saveAsTable(tbl)
-        )
-        _BUCKETED_ARCS[key] = spark.table(tbl)
-    return _BUCKETED_ARCS[key]
-
-
-def prepare_arcs_bucketed(
-    edges: DataFrame, tag: str, nbuckets: int = 16
-) -> DataFrame:
-    """Bidirected arc table bucketed by src at rest — the 100-TB dual of
-    prepare_arcs, for cc_find/luby_find with ``broadcast_state=False``."""
-    return _bucketed_by_src(bidirect(edges), tag, nbuckets)
-
-
-def prepare_warcs_bucketed(
-    warcs: DataFrame, tag: str, nbuckets: int = 16
-) -> DataFrame:
-    """Weighted arc table (src, dst, wu) bucketed by src at rest — the
-    100-TB dual of prepare_warcs, for sssp/sssp_multi with
-    ``broadcast_state=False``. `warcs` must already be bidirected
-    (weighted_arcs output)."""
-    return _bucketed_by_src(warcs, tag, nbuckets)
-
-
-def prepare_arcs_deg_bucketed(
-    edges: DataFrame, tag: str, nbuckets: int = 16
-) -> tuple[DataFrame, int]:
-    """(bucketed-by-src arc ⋈ out-degree table, vertex count) for pagerank
-    with ``broadcast_state=False``."""
-    arcs = bidirect(edges)
-    # NOTE: deliberately NOT the prepare_arcs_deg checkpoint-and-observe
-    # form — _bucketed_by_src memoizes on the canonicalized plan hash,
-    # and a checkpointed deg (LogicalRDD with a fresh RDD id per call)
-    # would miss the memo every run and rewrite the bucketed table (r14).
-    deg = arcs.groupBy(F.col("src").alias("v")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    )
-    arcs_deg = _bucketed_by_src(
-        arcs.join(deg, arcs.src == deg.v).select("src", "dst", "outdeg"),
-        f"{tag}_deg",
-        nbuckets,
-    )
-    return arcs_deg, deg.count()
-
-
-def _state_side(df: DataFrame, broadcast_state: bool) -> DataFrame:
-    """The vertex-state side of the per-round state ⋈ arcs join.
-
-    broadcast_state=True: explicit broadcast — the measured-fastest plan
-    while |V| fits executor memory (see module docstring). False: a
-    SHUFFLE_HASH hint — the state shuffles to the arc table's partitioning
-    and is hash-built per partition; pair with prepare_arcs_bucketed so the
-    arc side is bucketed at rest and never moves. Never let the planner
-    choose unhinted: LogicalRDD stats undercount the arc side and it would
-    broadcast |E| rows every round."""
-    return F.broadcast(df) if broadcast_state else df.hint("shuffle_hash")
-
-
 def cc_find(
     edges: DataFrame,
     max_iter: int = 50,
     arcs: DataFrame | None = None,
-    broadcast_state: bool = True,
 ) -> tuple[DataFrame, int]:
     """Connected components by synchronous min-label propagation: every
     vertex starts as its own zone (reduce_self_zone, oink/cc_find.cpp:133-138)
     and each round adopts the minimum label in its closed neighborhood, until
     no label changes (the reference's zone-reassignment loop :64-103).
-
-    ``broadcast_state=False`` (with ``arcs=prepare_arcs_bucketed(...)``) is
-    the beyond-broadcast-|V| path — see the module docstring.
 
     Returns ((v, zone) DataFrame, rounds run). zone = min vertex id of the
     component, matching the reference's winning-smaller-zone rule
@@ -239,10 +129,7 @@ def cc_find(
         # changed flag rides along for free, so convergence needs no
         # prev-vs-cur comparison join
         nbr_min = (
-            arcs.join(
-                _state_side(lab.select("v", "label"), broadcast_state),
-                arcs.src == lab.v,
-            )
+            arcs.join(F.broadcast(lab.select("v", "label")), arcs.src == lab.v)
             .groupBy(F.col("dst").alias("nv"))
             .agg(F.min("label").alias("ml"))
         )
@@ -269,7 +156,6 @@ def kcore(
     k: int,
     max_iter: int = 50,
     arcs: DataFrame | None = None,
-    broadcast_state: bool = True,
 ) -> tuple[DataFrame, int]:
     """K-core decomposition by synchronous peeling: repeatedly delete every
     vertex whose degree in the surviving induced subgraph is < k, until no
@@ -280,22 +166,19 @@ def kcore(
     Extends the reference's degree/cc toolkit (oink/degree.cpp +
     oink/cc_find.cpp's iterate-until-stable shape) with the subgraph-mining
     primitive neither ships; same per-round plan discipline as cc_find:
-    state (the survivor set) is broadcast by default, or shuffle-hash
-    against bucketed-at-rest arcs via ``broadcast_state=False`` when |V|
-    outgrows broadcast range.
+    state (the survivor set) is broadcast against arcs that never move.
 
     Per round, exactly cc_find's shape: ONE state join against the arc
     table on src (arcs bidirected, so counting surviving IN-neighbors per
     dst equals the undirected induced degree), one partially-aggregated
     groupBy(dst), then the O(|V|) degree table semi-filtered back to
-    survivors. The arc side carries a single src-keyed join — under the
-    bucketed path it genuinely never moves (an earlier form semi-joined
-    arcs on BOTH endpoints, whose dst-side join re-shuffled the whole
-    O(|E|) arc table every round; tests/test_graph_algorithms.py now pins
-    the no-arc-exchange property). A vertex whose surviving degree hits 0
-    leaves the state silently; that never changes another survivor's
-    degree (all its remaining edges pointed at already-deleted vertices),
-    so `no deg < k row` is an exact fixpoint test.
+    survivors. The arc side carries a single src-keyed join (an earlier
+    form semi-joined arcs on BOTH endpoints, whose dst-side join
+    re-shuffled the whole O(|E|) arc table every round). A vertex whose
+    surviving degree hits 0 leaves the state silently; that never changes
+    another survivor's degree (all its remaining edges pointed at
+    already-deleted vertices), so `no deg < k row` is an exact fixpoint
+    test.
 
     Returns ((v, core_deg) for vertices in the k-core, rounds run);
     core_deg is the vertex's degree inside the core-induced subgraph.
@@ -308,15 +191,15 @@ def kcore(
 
     def step(cur: DataFrame) -> DataFrame:
         surv = cur.filter(F.col("core_deg") >= k).select("v")
-        s1 = _state_side(surv, broadcast_state)
+        s1 = F.broadcast(surv)
         indeg = (
             arcs.join(s1, arcs.src == s1.v, "left_semi")
             .groupBy(F.col("dst").alias("v"))
             .agg(F.count(F.lit(1)).alias("core_deg"))
         )
-        # both sides here are O(|V|): the state side behaves exactly like
-        # the arc join's state side (broadcast or shuffle-hash)
-        s2 = _state_side(surv.select(F.col("v").alias("w")), broadcast_state)
+        # both sides here are O(|V|): the state side is broadcast exactly
+        # like the arc join's state side
+        s2 = F.broadcast(surv.select(F.col("v").alias("w")))
         return indeg.join(s2, indeg.v == F.col("w"), "left_semi")
 
     # convergence = no surviving vertex below k, observed during the
@@ -335,7 +218,6 @@ def label_propagation(
     edges: DataFrame,
     rounds: int,
     arcs: DataFrame | None = None,
-    broadcast_state: bool = True,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) for community
     detection — FIXED round count by design: synchronous LPA can oscillate
@@ -349,8 +231,7 @@ def label_propagation(
     IVF cell assignment). Extends the cc_find/kcore toolkit with the
     community primitive the reference lacks; per round the plan is
     cc_find's exact shape plus one aggregation: state ⋈ arcs on src
-    (state broadcast or shuffle-hash vs bucketed arcs via
-    ``broadcast_state``), a partially-aggregated groupBy(dst, label)
+    (state broadcast), a partially-aggregated groupBy(dst, label)
     count, then a groupBy(dst) struct-max — per-round shuffle volume is
     O(distinct (dst, neighbor-label) pairs) <= O(|E|), collapsing toward
     O(|V|) as communities coalesce.
@@ -366,10 +247,7 @@ def label_propagation(
 
     def step(lab: DataFrame) -> DataFrame:
         votes = (
-            arcs.join(
-                _state_side(lab.select("v", "label"), broadcast_state),
-                arcs.src == lab.v,
-            )
+            arcs.join(F.broadcast(lab.select("v", "label")), arcs.src == lab.v)
             .groupBy(F.col("dst").alias("nv"), "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
@@ -405,7 +283,6 @@ def sssp(
     source: int,
     max_iter: int = 50,
     arcs: DataFrame | None = None,
-    broadcast_state: bool = True,
 ) -> tuple[DataFrame, int]:
     """Single-source shortest paths by frontier relaxation
     (oink/sssp.cpp:49-180: seed source, loop {push dist+weight to neighbors,
@@ -419,11 +296,9 @@ def sssp(
     Only the changed frontier is joined against the arc list each round —
     the reference's `mr_dist_changed` set — so per-round shuffle volume is
     O(frontier ⋈ arcs), not O(V ⋈ arcs). The frontier is usually tiny, but
-    on a low-diameter graph the mid-BFS frontier is O(|V|): when |V|
-    outgrows broadcast range pass ``broadcast_state=False`` together with
-    ``arcs=prepare_warcs_bucketed(...)`` — the same beyond-broadcast path as
-    cc_find/pagerank/luby_find/kcore (module docstring). Returns ((v, du)
-    for *reached* vertices, rounds).
+    on a low-diameter graph the mid-BFS frontier is O(|V|) — still the
+    broadcast side, as in cc_find/pagerank/luby_find/kcore (module
+    docstring). Returns ((v, du) for *reached* vertices, rounds).
     """
     if arcs is None:
         arcs = prepare_warcs(warcs)
@@ -435,7 +310,7 @@ def sssp(
     def step(state: DataFrame) -> DataFrame:
         frontier = state.filter("changed")
         cand = (
-            arcs.join(_state_side(frontier, broadcast_state), frontier.v == arcs.src)
+            arcs.join(F.broadcast(frontier), frontier.v == arcs.src)
             .groupBy(F.col("dst").alias("cv"))
             .agg(F.min(F.col("du") + F.col("wu")).alias("nd"))
         )
@@ -460,7 +335,6 @@ def sssp_multi(
     sources: list[int],
     max_iter: int = 50,
     arcs: DataFrame | None = None,
-    broadcast_state: bool = True,
 ) -> tuple[DataFrame, int]:
     """Multi-source shortest paths in ONE synchronous loop.
 
@@ -471,9 +345,8 @@ def sssp_multi(
     rounds over the same arc scan: total rounds = MAX per-source rounds
     instead of their SUM, and each round's join amortizes the arc-table
     read across all sources. Same exact integer-unit discipline and
-    ``broadcast_state=False`` beyond-broadcast path as sssp() — the keyed
-    frontier is |sources| times bigger, so the broadcast ceiling arrives
-    correspondingly sooner here. Returns ((s, v, du) for reached vertices,
+    broadcast frontier as sssp() — the keyed frontier is |sources| times
+    bigger, so the broadcast ceiling arrives correspondingly sooner here. Returns ((s, v, du) for reached vertices,
     rounds)."""
     if arcs is None:
         arcs = prepare_warcs(warcs)
@@ -486,7 +359,7 @@ def sssp_multi(
     def step(state: DataFrame) -> DataFrame:
         frontier = state.filter("changed")
         cand = (
-            arcs.join(_state_side(frontier, broadcast_state), frontier.v == arcs.src)
+            arcs.join(F.broadcast(frontier), frontier.v == arcs.src)
             .groupBy(F.col("s").alias("cs"), F.col("dst").alias("cv"))
             .agg(F.min(F.col("du") + F.col("wu")).alias("nd"))
         )
@@ -518,7 +391,6 @@ def pagerank(
     alpha_num: int = 17,
     alpha_den: int = 20,
     arcs_deg_n: tuple[DataFrame, int] | None = None,
-    broadcast_state: bool = True,
 ) -> DataFrame:
     """PageRank with damping alpha = alpha_num/alpha_den (default 0.85), run
     for a fixed number of synchronous iterations.
@@ -551,7 +423,7 @@ def pagerank(
         # contribution aggregate already covers the whole vertex set — new
         # ranks come straight off it, no join back onto the old rank table
         return (
-            arcs_deg.join(_state_side(ranks, broadcast_state), arcs_deg.src == ranks.v)
+            arcs_deg.join(F.broadcast(ranks), arcs_deg.src == ranks.v)
             .select(
                 F.col("dst").alias("cv"),
                 F.expr(f"({alpha_num} * r) div ({alpha_den} * outdeg)").alias("c"),
@@ -581,7 +453,6 @@ def forest_fire_sample(
     rounds: int = 4,
     t_num: int = 3,
     t_den: int = 10,
-    broadcast_state: bool = True,
     arcs: DataFrame | None = None,
 ) -> DataFrame:
     """Deterministic forest-fire / snowball graph sampling (Leskovec &
@@ -600,9 +471,8 @@ def forest_fire_sample(
     subgraph keeps its multi-attachment structure.
 
     Returns (r, src, dst) for every surviving arc, r = 1..rounds.
-    Plan per round: ONE arcs ⋈ frontier join (broadcast-or-bucketed
-    via `_state_side`; pair ``broadcast_state=False`` with
-    ``prepare_arcs_bucketed``) + a left-anti join against the burned
+    Plan per round: ONE arcs ⋈ frontier join (frontier broadcast)
+    + a left-anti join against the burned
     vertex state + the codegen hash filter; the burned/frontier states
     are O(|V|) rows, checkpointed per round. 100 TB: cost ∝ arcs
     TOUCHED by the fire, never |E| — the point of sampling before an
@@ -644,7 +514,7 @@ def forest_fire_sample(
     for r in range(1, rounds + 1):
         fr = frontier.select(F.col("v").alias("fv"))
         cand = (
-            arcs.join(_state_side(fr, broadcast_state), arcs.src == F.col("fv"))
+            arcs.join(F.broadcast(fr), arcs.src == F.col("fv"))
             .select("src", "dst")
             .join(
                 burned.select(F.col("v").alias("bv")),
@@ -682,7 +552,6 @@ def personalized_pagerank(
     alpha_num: int = 17,
     alpha_den: int = 20,
     arcs_deg_n: "tuple[DataFrame, int] | None" = None,
-    broadcast_state: bool = True,
 ) -> DataFrame:
     """Personalized PageRank: the teleport mass lands ONLY on the source
     set instead of uniformly — the source-biased random-walk proximity
@@ -699,8 +568,8 @@ def personalized_pagerank(
     redistributed). Undirected bidirected arcs → no dangling mass.
 
     The source membership test is a literal IN over the O(|S|) id list —
-    broadcast-free; everything else is pagerank's plan, including the
-    ``broadcast_state=False`` + ``prepare_arcs_deg_bucketed`` path.
+    broadcast-free; everything else is pagerank's plan (ranks broadcast
+    against the dst-partitioned arcs_deg table).
     Output: (v, ppr_units BIGINT, ppr DOUBLE)."""
     if not sources:
         raise ValueError("personalized_pagerank: empty source set")
@@ -742,9 +611,7 @@ def personalized_pagerank(
 
     def step(ranks: DataFrame) -> DataFrame:
         return (
-            arcs_deg.join(
-                _state_side(ranks, broadcast_state), arcs_deg.src == ranks.v
-            )
+            arcs_deg.join(F.broadcast(ranks), arcs_deg.src == ranks.v)
             .select(
                 F.col("dst").alias("cv"),
                 F.expr(f"({alpha_num} * r) div ({alpha_den} * outdeg)").alias(
@@ -778,7 +645,6 @@ def luby_find(
     seed: int = 12345,
     max_iter: int = 50,
     arcs: DataFrame | None = None,
-    broadcast_state: bool = True,
 ) -> tuple[DataFrame, int]:
     """Luby's maximal independent set (oink/luby_find.cpp:53-95).
 
@@ -819,8 +685,8 @@ def luby_find(
         ud = und.select(F.col("v").alias("dv"))
         # arcs of the undecided-only subgraph, annotated with source priority
         uarcs = (
-            arcs.join(_state_side(us, broadcast_state), arcs.src == F.col("sv"))
-            .join(_state_side(ud, broadcast_state), arcs.dst == F.col("dv"))
+            arcs.join(F.broadcast(us), arcs.src == F.col("sv"))
+            .join(F.broadcast(ud), arcs.dst == F.col("dv"))
             .select(F.col("dst").alias("v"), F.col("spri"), F.col("src").alias("sv"))
         )
         nbr_min = uarcs.groupBy("v").agg(
@@ -844,7 +710,7 @@ def luby_find(
         # round; on the scheduling-floor-bound small-graph rounds that is
         # the dominant cost).
         losers = (
-            arcs.join(_state_side(winners, broadcast_state), arcs.src == F.col("wv"))
+            arcs.join(F.broadcast(winners), arcs.src == F.col("wv"))
             .select(F.col("dst").alias("dv2"))
             .distinct()
         )
@@ -1047,7 +913,6 @@ def betweenness_sources(
     sources: list[int],
     max_depth: int = 30,
     arcs: DataFrame | None = None,
-    broadcast_state: bool = True,
 ) -> tuple[DataFrame, int]:
     """K-source partial betweenness centrality (Brandes 2001 restricted to
     a fixed source set — the standard estimator at scale; SCALE.md r11
@@ -1075,9 +940,7 @@ def betweenness_sources(
     Returns ((v, bc_u) summed over sources for every vertex reached at
     depth >= 1 from any source, bc_u in BC_SCALE units, max BFS depth).
     Per round only (s, v, sigma/delta) BIGINT rows shuffle; the state
-    side broadcasts while |frontier|·|sources| is bounded
-    (``broadcast_state=False`` for the bucketed beyond-broadcast path,
-    as in sssp_multi). Raises on max_depth exhaustion (a truncated BFS
+    side broadcasts, as in sssp_multi. Raises on max_depth exhaustion (a truncated BFS
     tree silently undercounts every dependency — the ktruss_edges
     discipline)."""
     if arcs is None:
@@ -1094,7 +957,7 @@ def betweenness_sources(
     for _ in range(max_depth):
         cur = layers[-1]
         nxt = (
-            arcs.join(_state_side(cur, broadcast_state), arcs.src == cur.v)
+            arcs.join(F.broadcast(cur), arcs.src == cur.v)
             .groupBy(F.col("s"), F.col("dst").alias("nv"))
             .agg(F.sum("sigma").alias("sigma"))
         )
@@ -1138,9 +1001,7 @@ def betweenness_sources(
             F.col("sigma").alias("wsig"),
             F.col("delta").alias("wdelta"),
         )
-        cand = arcs.join(
-            _state_side(wside, broadcast_state), arcs.dst == F.col("wv")
-        ).select(
+        cand = arcs.join(F.broadcast(wside), arcs.dst == F.col("wv")).select(
             F.col("ws").alias("cs"),
             F.col("src").alias("cv"),
             "wsig",
@@ -1226,7 +1087,7 @@ def boruvka_msf(
     admits depth 2^16 while msf_rmat's oracle unrolls 7 doublings; a
     deeper chain must fail loudly at the guard, not as an opaque row
     mismatch). 100 TB: per round the edge list joins the broadcast-sized
-    component map twice (or shuffle-hash beyond broadcast range), the
+    component map twice, the
     argmin is one aggregate to <= |components| rows, and the
     pointer-jump state is |components| rows shrinking geometrically."""
     V_SHIFT = 1 << 20
@@ -1505,7 +1366,6 @@ def jp_coloring(
     seed: int = 0,
     max_rounds: int = 60,
     arcs: DataFrame | None = None,
-    broadcast_state: bool = True,
 ) -> tuple[DataFrame, int]:
     """Jones-Plassmann greedy graph coloring (Jones & Plassmann, "A
     Parallel Graph Coloring Heuristic", SIAM J. Sci. Comput. 1993) —
@@ -1533,15 +1393,11 @@ def jp_coloring(
     Returns ((v, color) for every vertex, rounds). Validity (no
     monochromatic edge) and exact hand-graph colors are pinned in
     tests/test_graph_algorithms.py. 100 TB: the per-round bill is two
-    edge-list joins against broadcast-or-bucketed vertex state — the
-    luby_find posture with a color column. Both state joins key on
-    arcs.src (neighbors read off dst — identical on the bidirected arc
-    set), so ``broadcast_state=False`` with
-    ``arcs=prepare_arcs_bucketed(...)`` is the beyond-broadcast-|V|
-    path: state shuffles to the arcs' src bucketing, the O(|E|) side
-    never moves, nothing is broadcast (round 1's uncolored set is ALL
-    of |V| — the largest state the operator ever holds, so a hard
-    broadcast there would be the scale ceiling; r11 ADVICE). Expected
+    edge-list joins against broadcast vertex state — the luby_find
+    posture with a color column. Both state joins key on arcs.src
+    (neighbors read off dst — identical on the bidirected arc set);
+    round 1's uncolored set is ALL of |V|, the largest state the
+    operator ever broadcasts. Expected
     rounds O(log n) on bounded-degree graphs; hub-heavy graphs
     serialize around priority chains, which the round bound makes loud
     instead of silent."""
@@ -1580,10 +1436,10 @@ def jp_coloring(
         rounds += 1
         # local-max test among UNCOLORED neighbors only: state joins on
         # arcs.src, neighbors read off dst (identical on the bidirected
-        # set) — the key prepare_arcs_bucketed buckets by
+        # set)
         un_s = uncolored.select(F.col("v").alias("uv"), F.col("p").alias("up"))
         nbr_max = (
-            arcs.join(_state_side(un_s, broadcast_state), arcs.src == F.col("uv"))
+            arcs.join(F.broadcast(un_s), arcs.src == F.col("uv"))
             .groupBy(F.col("dst").alias("v"))
             .agg(F.max("up").alias("nmax"))
         )
@@ -1597,9 +1453,9 @@ def jp_coloring(
         # a winner with k colored neighbors needs only candidates 0..k
         col_s = colored.select(F.col("v").alias("cv"), "color")
         wn = winners.join(
-            arcs.join(
-                _state_side(col_s, broadcast_state), arcs.src == F.col("cv")
-            ).select(F.col("dst").alias("v"), "color"),
+            arcs.join(F.broadcast(col_s), arcs.src == F.col("cv")).select(
+                F.col("dst").alias("v"), "color"
+            ),
             "v",
             "left",
         )
@@ -1639,7 +1495,6 @@ def jp_coloring(
 def greedy_matching(
     wedges: DataFrame,
     max_rounds: int = 30,
-    broadcast_state: bool = True,
 ) -> tuple[DataFrame, list[int]]:
     """Deterministic maximal weighted matching by Luby-round edge
     priorities (SCALE.md wave-4 design) — the pair-resolution primitive
@@ -1736,13 +1591,11 @@ def greedy_matching(
             .groupBy("v")
             .agg(F.min("pk").alias("vm"))
         )
-        vs = _state_side(
-            vmin.select(F.col("v").alias("sv"), F.col("vm").alias("svm")),
-            broadcast_state,
+        vs = F.broadcast(
+            vmin.select(F.col("v").alias("sv"), F.col("vm").alias("svm"))
         )
-        vd = _state_side(
-            vmin.select(F.col("v").alias("dv"), F.col("vm").alias("dvm")),
-            broadcast_state,
+        vd = F.broadcast(
+            vmin.select(F.col("v").alias("dv"), F.col("vm").alias("dvm"))
         )
         # the per-round matched count — the ONE driver scalar — is
         # observed during the winners checkpoint itself (no count job)
@@ -1761,11 +1614,10 @@ def greedy_matching(
                 F.lit(rnd).cast("int").alias("round"), "src", "dst", "wu"
             )
         )
-        mv = _state_side(
+        mv = F.broadcast(
             winners.select(F.col("src").alias("mv"))
             .unionAll(winners.select(F.col("dst").alias("mv")))
-            .distinct(),
-            broadcast_state,
+            .distinct()
         )
         lobs = Observation()
         live = (

@@ -52,20 +52,17 @@ def _ivf_existing_at_rest(spark: SparkSession, sf_dir: str):
     rest. Immutable for the session — appends lay new files alongside."""
 
     def build():
-        import atexit
-        import shutil
-        import tempfile
-
         existing = table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") % _MOD != _REM
         )
         centroids, assigned = similarity.ivf_build(
             existing, n_centroids=_IVF_CENTROIDS, seed=_IVF_SEED
         )
-        path = tempfile.mkdtemp(prefix="ivf_base_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        assigned.write.mode("overwrite").partitionBy("cid").parquet(path)
-        return centroids, path
+
+        def write(path: str) -> None:
+            assigned.write.mode("overwrite").partitionBy("cid").parquet(path)
+
+        return centroids, fixtures.derived_dir(spark, sf_dir, "ivf_base", write)
 
     return fixtures.derived(spark, sf_dir, "ivf_existing_at_rest", build)
 

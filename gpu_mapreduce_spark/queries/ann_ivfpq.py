@@ -53,15 +53,9 @@ def _ivfpq_at_rest(spark: SparkSession, sf_dir: str) -> str:
     memos; this join + write is the one extra one-time cost of the
     composed index."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
+    def write(path: str) -> None:
         _centroids, assigned = _ivf_index(spark, sf_dir)
         _books, codes = _pq_index(spark, sf_dir)
-        path = tempfile.mkdtemp(prefix="ivfpq_at_rest_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
         (
             assigned.select("vec_id", "cid")
             .join(codes, "vec_id")
@@ -69,9 +63,8 @@ def _ivfpq_at_rest(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("cid")
             .parquet(path)
         )
-        return path
 
-    return fixtures.derived(spark, sf_dir, "ivfpq_at_rest", build)
+    return fixtures.derived_dir(spark, sf_dir, "ivfpq_at_rest", write)
 
 
 @register(

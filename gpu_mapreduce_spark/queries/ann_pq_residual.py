@@ -126,25 +126,22 @@ def _respq_index(
     _ivfpq_at_rest amortization discipline)."""
 
     def build() -> tuple[dict[int, list[tuple[int, list[float]]]], str]:
-        import atexit
-        import shutil
-        import tempfile
-
         centroids, assigned = _ivf_index(spark, sf_dir)
         res = residual_frame(assigned, centroids).localCheckpoint(
             eager=True
         )
         books = similarity._books_rows(similarity.pq_codebooks(res))
         codes = similarity.pq_encode(res, books)
-        path = tempfile.mkdtemp(prefix="respq_at_rest_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        (
-            codes.join(res.select("vec_id", "cid"), "vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(path)
-        )
-        return books, path
+
+        def write(path: str) -> None:
+            (
+                codes.join(res.select("vec_id", "cid"), "vec_id")
+                .write.mode("overwrite")
+                .partitionBy("cid")
+                .parquet(path)
+            )
+
+        return books, fixtures.derived_dir(spark, sf_dir, "respq_at_rest", write)
 
     return fixtures.derived(spark, sf_dir, "respq_index", build)
 

@@ -30,9 +30,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from gpu_mapreduce_spark.operators import textstats as ts
-from gpu_mapreduce_spark.queries.textstats import _TOKS, _sql_ngrams, _wide
+from gpu_mapreduce_spark.queries.textstats import _TOKS, _sql_ngrams
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources import fixtures
+from gpu_mapreduce_spark.sources.tables import widen
 
 
 @register(
@@ -65,4 +66,4 @@ def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bloom-prefiltered physical path (operators/textstats.
     contamination_bloom); the oracle is the exact hashed join because
     verification removes every false positive."""
-    return ts.contamination_bloom(_wide(fixtures.corpus(spark, sf_dir)))
+    return ts.contamination_bloom(widen(fixtures.corpus(spark, sf_dir)))

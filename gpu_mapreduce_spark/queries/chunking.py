@@ -23,9 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.operators import textstats as ts
-from gpu_mapreduce_spark.queries.textstats import _TOKS, _wide
+from gpu_mapreduce_spark.queries.textstats import _TOKS
 from gpu_mapreduce_spark.registry import register
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 CHUNK = 32
 STRIDE = 24
@@ -64,7 +64,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     every document: (doc_id, chunk_id, n_toks, chunk_fp). The final chunk
     may be short (the grid clamps at the doc end); zero-token docs emit
     no chunks."""
-    staged = _wide(table(spark, sf_dir, "documents")).select(
+    staged = widen(table(spark, sf_dir, "documents")).select(
         "doc_id", ts.tokens(F.col("text")).alias("toks")
     )
     n = F.size("toks")

@@ -88,13 +88,7 @@ def _base_cells_at_rest(spark: SparkSession, sf_dir: str) -> str:
     """Session-memoized at-rest cells of the EXISTING events — the
     immutable base the microbatch partials fold into."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="cms_base_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def write(path: str) -> None:
         (
             _cells(
                 _fine_rows(spark, sf_dir).filter(
@@ -104,9 +98,8 @@ def _base_cells_at_rest(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        return path
 
-    return fixtures.derived(spark, sf_dir, "cms_base_cells", build)
+    return fixtures.derived_dir(spark, sf_dir, "cms_base_cells", write)
 
 
 def _delta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -114,13 +107,7 @@ def _delta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     _N_SRC_FILES parquet files so maxFilesPerTrigger=1 yields that
     many microbatches."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="cms_delta_stream_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def write(path: str) -> None:
         (
             _fine_rows(spark, sf_dir)
             .filter(F.col("event_id") % _MOD == _REM)
@@ -128,9 +115,8 @@ def _delta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        return path
 
-    return fixtures.derived(spark, sf_dir, "cms_delta_stream_dir", build)
+    return fixtures.derived_dir(spark, sf_dir, "cms_delta_stream_dir", write)
 
 
 @register(

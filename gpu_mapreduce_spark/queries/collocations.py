@@ -27,9 +27,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.operators import textstats as ts
-from gpu_mapreduce_spark.queries.textstats import _TOKS, _sql_ngrams, _wide
+from gpu_mapreduce_spark.queries.textstats import _TOKS, _sql_ngrams
 from gpu_mapreduce_spark.registry import register
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 _MIN_COUNT = 5
 _TOPK = 20
@@ -63,7 +63,7 @@ def collocations_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{_TOPK} adjacent-pair collocations by exact-integer scaled PMI:
     (bigram, n_ab, pmi_e4) with pmi_e4 = n_ab*N*10000 // (n_a*n_b),
     min pair count {_MIN_COUNT}."""
-    staged = _wide(table(spark, sf_dir, "documents")).select(
+    staged = widen(table(spark, sf_dir, "documents")).select(
         ts.tokens(F.col("text")).alias("toks")
     )
     uni = staged.select(F.explode("toks").alias("w"))

@@ -14,8 +14,8 @@ instance, N=10 / Nz=2 / seed 12345 (602 vertices, 1 936 canonical
 edges): measured 29 JP rounds, unrolled at {_JP_STAGES} with margin —
 the kcore_rmat discipline of sizing the INSTANCE to a provable oracle
 instead of truncating the ALGORITHM. The operator itself carries the
-100 TB posture (broadcast-or-bucketed vertex state, r11 ADVICE fix —
-tests/test_graph_algorithms.py runs both paths).
+100 TB posture (broadcast vertex state against arcs that never move, the
+cc_find posture).
 
 Oracle: the parameterized generate-and-cull replay
 (queries/rmat_gen._rmat_canon_sql at N=10/Nz=2) + {_JP_STAGES} unrolled

@@ -17,10 +17,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.operators import dedup, text
-from gpu_mapreduce_spark.queries.textstats import _TOKS, _sql_ngrams, _wide
+from gpu_mapreduce_spark.queries.textstats import _TOKS, _sql_ngrams
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources import fixtures
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 _N = 2
 _MIN_COUNT = 2
@@ -47,7 +47,7 @@ def ngram_counts_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cnt desc, gram) so the LIMIT is deterministic. One explode + one
     partially-aggregated shuffle + TakeOrderedAndProject."""
     counts = text.ngram_counts(
-        _wide(table(spark, sf_dir, "documents")), n=_N, min_count=_MIN_COUNT
+        widen(table(spark, sf_dir, "documents")), n=_N, min_count=_MIN_COUNT
     )
     return counts.orderBy(F.desc("cnt"), "g").limit(_TOPK)
 
@@ -99,7 +99,7 @@ def passage_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole passages), and the oracle replays fingerprint selection, the
     exclusion, and the pair counts exactly."""
     return dedup.passage_dup_pairs(
-        _wide(fixtures.corpus(spark, sf_dir)),
+        widen(fixtures.corpus(spark, sf_dir)),
         k=_K,
         w=_W,
         min_shared=_MIN_SHARED,

@@ -35,9 +35,10 @@ from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.functions.portable import hash60
 from gpu_mapreduce_spark.operators import textstats as ts
-from gpu_mapreduce_spark.queries.textstats import _TOKS, _sql_ngrams, _wide
+from gpu_mapreduce_spark.queries.textstats import _TOKS, _sql_ngrams
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources import fixtures
+from gpu_mapreduce_spark.sources.tables import widen
 
 _N = 5
 _TRAIN_LT = 95  # bucket < 95 -> train (dataset_split_report's split rule)
@@ -84,7 +85,7 @@ def split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     of dataset_split_report, so this audits exactly the split a pipeline
     would materialize). Test docs shorter than 5 tokens have no grams and
     drop out — there is nothing to leak."""
-    corpus = _wide(fixtures.corpus(spark, sf_dir))
+    corpus = widen(fixtures.corpus(spark, sf_dir))
     bkt = (
         hash60(F.concat_ws("|", F.lit("split"), F.col("doc_id").cast("string")))
         % 100

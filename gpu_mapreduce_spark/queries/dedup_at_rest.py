@@ -20,8 +20,8 @@ delta-signature + an equi-join on (band, bh) whose candidate volume is
 proportional to the DELTA, never the corpus; verification joins only the
 banding-bounded candidate pairs back to the two shingle stores. At cluster
 scale the index would additionally be bucketed by bh within each band
-directory (the prepare_arcs_bucketed discipline) so the probe join needs
-no exchange on the index side.
+directory (sources/bucketed.bucketed_table's layout) so the probe join
+needs no exchange on the index side.
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from gpu_mapreduce_spark.operators import dedup
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources import fixtures
+from gpu_mapreduce_spark.sources.tables import widen
 
 _SPLIT = 1_000_000  # existing corpus: doc_id < split; delta batch: >= split
 _T = 0.8
@@ -50,15 +51,9 @@ def _lsh_index_at_rest(spark: SparkSession, sf_dir: str) -> str:
     (atexit-removed) — on a cluster this is the persisted index a dedup
     service maintains at ingest."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
+    def write(root: str) -> None:
         corpus = fixtures.corpus(spark, sf_dir)
-        existing = corpus.filter(F.col("doc_id") < _SPLIT).repartition(
-            spark.sparkContext.defaultParallelism
-        )
+        existing = widen(corpus.filter(F.col("doc_id") < _SPLIT))
         docs = (
             existing.select(
                 "doc_id", dedup.shingle_array(text_col="text").alias("shs")
@@ -66,15 +61,12 @@ def _lsh_index_at_rest(spark: SparkSession, sf_dir: str) -> str:
             .localCheckpoint(eager=True)
             .filter(F.size("shs") > 0)
         )
-        root = tempfile.mkdtemp(prefix="lsh_index_at_rest_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
         dedup.minhash_band_entries(docs).write.mode("overwrite").partitionBy(
             "band"
         ).parquet(f"{root}/bands")
         docs.write.mode("overwrite").parquet(f"{root}/shingles")
-        return root
 
-    return fixtures.derived(spark, sf_dir, "lsh_index_at_rest", build)
+    return fixtures.derived_dir(spark, sf_dir, "lsh_index_at_rest", write)
 
 
 @register(

@@ -42,6 +42,7 @@ from gpu_mapreduce_spark.queries.dedup import (
 from gpu_mapreduce_spark.queries.quality_classifier import clf_score_ctes
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources import fixtures
+from gpu_mapreduce_spark.sources.tables import widen
 
 
 @register(
@@ -77,10 +78,7 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BEFORE the compute-bound tokenization (AQE broadcasts the small
     # members side at fixture scale; at 100 TB the score tier is an
     # at-rest table and this whole branch is a plain narrow join). The
-    # repartition widens the pruned scan off its 1-2 input splits (the
-    # textstats._wide discipline).
-    clustered = corpus.join(members.select("doc_id"), "doc_id").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # pruned scan is widened off its 1-2 input splits.
+    clustered = widen(corpus.join(members.select("doc_id"), "doc_id"))
     scores = ts.classifier_scores(clustered).select("doc_id", "score_u")
     return dedup.canonical_by_score(members, scores)

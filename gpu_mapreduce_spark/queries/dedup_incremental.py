@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from gpu_mapreduce_spark.operators import dedup
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources import fixtures
+from gpu_mapreduce_spark.sources.tables import widen
 
 _SPLIT = 1_000_000  # corpus fixture: originals < 1e6, injected copies >= 1e6
 
@@ -78,10 +79,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "inc_shingles",
         lambda: dedup.shingle_set(
-            fixtures.corpus(spark, sf_dir).repartition(
-                spark.sparkContext.defaultParallelism
-            ),
-            k=3,
+            widen(fixtures.corpus(spark, sf_dir)), k=3
         ).localCheckpoint(eager=True),
     )
     return dedup.incremental_status(

@@ -61,7 +61,7 @@ from gpu_mapreduce_spark.functions.drift import drift_stat
 from gpu_mapreduce_spark.operators import textstats as ts
 from gpu_mapreduce_spark.queries.quality_classifier import clf_score_ctes
 from gpu_mapreduce_spark.registry import register
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 # score_u = 3*stop_u + 2*uniq_u - 2*dup2_u - 1*top_u + 5*min(n_tokens, cap)
 # with each ratio unit in [0, CLF_SCALE]: provable floor = -(2+1)*CLF_SCALE.
@@ -74,9 +74,7 @@ def _hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bin parity histogram: one scan, one combinable aggregate."""
     docs = table(spark, sf_dir, "documents")
     # compute-bound scoring over a single-split parquet: widen first
-    # (the quality_classifier_join / textstats._wide discipline)
-    wide = docs.repartition(spark.sparkContext.defaultParallelism)
-    scores = ts.classifier_scores(wide).select(
+    scores = ts.classifier_scores(widen(docs)).select(
         F.expr(f"CAST((score_u + {_SHIFT}) div {_BIN_W} AS BIGINT)").alias(
             "bin_id"
         ),

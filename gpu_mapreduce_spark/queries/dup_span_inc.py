@@ -75,11 +75,7 @@ def _existing_df_at_rest(spark: SparkSession, sf_dir: str) -> str:
     """Session-memoized at-rest per-fingerprint existing doc-frequency
     table (h, nd_ex), parquet + explicit-schema read-back."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
+    def write(path: str) -> None:
         existing = fixtures.corpus(spark, sf_dir).filter(
             F.col("doc_id") < _SPLIT
         )
@@ -90,12 +86,9 @@ def _existing_df_at_rest(spark: SparkSession, sf_dir: str) -> str:
             .groupBy("h")
             .agg(F.count(F.lit(1)).cast("bigint").alias("nd_ex"))
         )
-        path = tempfile.mkdtemp(prefix="dup_span_index_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
         dfreq.write.mode("overwrite").parquet(path)
-        return path
 
-    return fixtures.derived(spark, sf_dir, "dup_span_index_at_rest", build)
+    return fixtures.derived_dir(spark, sf_dir, "dup_span_index_at_rest", write)
 
 
 @register(

@@ -22,8 +22,8 @@ excluded from candidacy before the round (round-synchronous no-revisit).
 Oracle: {_ROUNDS} unrolled CTE rounds of the same join + anti-join +
 threshold draw over the generate-and-cull replay.
 
-100 TB: per round one frontier ⋈ arcs join (broadcast-or-bucketed via
-the shared `_state_side`) + an anti-join against the burned vertex
+100 TB: per round one frontier ⋈ arcs join (frontier broadcast, arcs
+never moving) + an anti-join against the burned vertex
 state; cost ∝ arcs touched by the fire, never |E|.
 """
 

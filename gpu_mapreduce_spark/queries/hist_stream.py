@@ -63,23 +63,16 @@ def _base_partials_at_rest(spark: SparkSession, sf_dir: str) -> str:
     (d, hh, bin, n_h) — the immutable base table microbatch partials
     fold into."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
+    def write(path: str) -> None:
         base = (
             _fine_rows(spark, sf_dir)
             .filter(F.col("event_id") % _MOD != _REM)
             .groupBy("d", "hh", "bin")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_h"))
         )
-        path = tempfile.mkdtemp(prefix="hist_base_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
         base.write.mode("overwrite").parquet(path)
-        return path
 
-    return fixtures.derived(spark, sf_dir, "hist_base_partials", build)
+    return fixtures.derived_dir(spark, sf_dir, "hist_base_partials", write)
 
 
 def _delta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -87,13 +80,7 @@ def _delta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     _N_SRC_FILES parquet files so maxFilesPerTrigger=1 yields that many
     microbatches."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="hist_delta_stream_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def write(path: str) -> None:
         (
             _fine_rows(spark, sf_dir)
             .filter(F.col("event_id") % _MOD == _REM)
@@ -101,9 +88,8 @@ def _delta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        return path
 
-    return fixtures.derived(spark, sf_dir, "hist_delta_stream_dir", build)
+    return fixtures.derived_dir(spark, sf_dir, "hist_delta_stream_dir", write)
 
 
 @register(

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.operators import dedup
 from gpu_mapreduce_spark.registry import register
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 _M = 64  # registers (2^6 buckets; 60-bit hash leaves 54 rho bits)
 _RHO_MAX = 55  # 54 zero bits + 1
@@ -98,10 +98,8 @@ def hll_registers_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The m=64 HLL register table over the documents table's shingle
     stream — the persistable, mergeable distinct-shingle sketch. The
     corpus is widened to full parallelism before the compute-bound
-    shingle pass (r15; the textstats._wide / quality_classifier_join
-    discipline — the documents parquet arrives in ONE input split at
-    test scale, so the shingling otherwise runs single-task: measured
-    11.9 s at the 10x scale point with zero shuffle, pure serial CPU)."""
-    from gpu_mapreduce_spark.queries.textstats import _wide
-
-    return hll_registers(_wide(table(spark, sf_dir, "documents")))
+    shingle pass (r15; sources.tables.widen — the documents parquet
+    arrives in ONE input split at test scale, so the shingling otherwise
+    runs single-task: measured 11.9 s at the 10x scale point with zero
+    shuffle, pure serial CPU)."""
+    return hll_registers(widen(table(spark, sf_dir, "documents")))

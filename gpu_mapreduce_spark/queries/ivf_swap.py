@@ -60,23 +60,16 @@ def _ivf_old_full_at_rest(spark: SparkSession, sf_dir: str) -> str:
     centroids), written cid-partitioned once — the accumulated store state
     an out-of-band retrain supersedes."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
+    def write(path: str) -> None:
         centroids, base_path = _ivf_existing_at_rest(spark, sf_dir)
         delta = table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") % _MOD == _REM
         )
         base = spark.read.schema(_AT_REST_SCHEMA).parquet(base_path)
         full = base.unionByName(similarity.ivf_assign(delta, centroids))
-        path = tempfile.mkdtemp(prefix="ivf_old_full_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
         full.write.mode("overwrite").partitionBy("cid").parquet(path)
-        return path
 
-    return fixtures.derived(spark, sf_dir, "ivf_old_full_at_rest", build)
+    return fixtures.derived_dir(spark, sf_dir, "ivf_old_full_at_rest", write)
 
 
 @register(

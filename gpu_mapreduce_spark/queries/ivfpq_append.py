@@ -72,11 +72,7 @@ def _ivfpq_existing_at_rest(spark: SparkSession, sf_dir: str) -> str:
     cid-partitioned once. Immutable for the session — appends lay new
     files alongside."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
+    def write(path: str) -> None:
         from gpu_mapreduce_spark.queries.similarity import _AT_REST_SCHEMA
 
         _centroids, base_path = _ivf_existing_at_rest(spark, sf_dir)
@@ -89,8 +85,6 @@ def _ivfpq_existing_at_rest(spark: SparkSession, sf_dir: str) -> str:
             .parquet(base_path)
             .select("vec_id", "cid")
         )
-        path = tempfile.mkdtemp(prefix="ivfpq_base_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
         (
             similarity.pq_encode(existing, books)
             .join(base_cids, "vec_id")
@@ -98,9 +92,8 @@ def _ivfpq_existing_at_rest(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("cid")
             .parquet(path)
         )
-        return path
 
-    return fixtures.derived(spark, sf_dir, "ivfpq_existing_at_rest", build)
+    return fixtures.derived_dir(spark, sf_dir, "ivfpq_existing_at_rest", write)
 
 
 @register(

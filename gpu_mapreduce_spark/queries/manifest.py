@@ -42,7 +42,7 @@ from gpu_mapreduce_spark.operators import sampling
 from gpu_mapreduce_spark.operators import textstats as ts
 from gpu_mapreduce_spark.queries.quality_classifier import clf_score_ctes
 from gpu_mapreduce_spark.registry import register
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 _SPLIT = sampling.sql_split_expr("split", "doc_id")
 _FP = r"md5(lower(regexp_replace(text, '\s+', ' ', 'g')))"
@@ -93,8 +93,9 @@ def corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint, classifier-score, and split disciplines. Every count is
     an exact integer, so the hash gate pins the whole card."""
     docs = table(spark, sf_dir, "documents")
-    wide = docs.repartition(spark.sparkContext.defaultParallelism)
-    scored = ts.classifier_scores(wide).select("doc_id", "n_tokens", "score_u")
+    scored = ts.classifier_scores(widen(docs)).select(
+        "doc_id", "n_tokens", "score_u"
+    )
     quality = (
         docs.select("source", "doc_id")
         .join(scored, "doc_id")

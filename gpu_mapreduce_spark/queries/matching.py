@@ -27,7 +27,7 @@ rounds than the unroll — loud on both sides (the msf_rmat discipline).
 
 100 TB: per round cost ∝ LIVE edges (halving geometry like
 luby/boruvka); the per-vertex min is one map-side-combinable aggregate
-and the state joins are broadcast-or-bucketed (_state_side). The
+and the state joins broadcast the per-vertex mins. The
 matched set streams out incrementally — nothing driver-side but one
 count scalar per round.
 """

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gpu_mapreduce_spark.operators import textstats as ts
 from gpu_mapreduce_spark.registry import register
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 _CAP = 512
 _SHARDS = 8
@@ -51,8 +51,6 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/textstats.pack_sequences): per-bin doc count, token total
     (capacity + bounded straddle slack), and an md5 digest of the exact
     doc_id membership."""
-    from gpu_mapreduce_spark.queries.textstats import _wide
-
     return ts.pack_sequences(
-        _wide(table(spark, sf_dir, "documents")), capacity=_CAP, shards=_SHARDS
+        widen(table(spark, sf_dir, "documents")), capacity=_CAP, shards=_SHARDS
     )

@@ -21,8 +21,8 @@ by the oracle).
 Oracle: 10 unrolled CTE rounds of the same integer algebra over the
 fixtures edge CTE — pagerank's oracle with the CASE-gated teleport and
 seeded init. 100 TB: identical posture to pagerank (one arcs_deg ⋈
-state join + map-side-combinable SUM per round, broadcast-or-bucketed
-state via the shared `_state_side`); the personalization adds only a
+state join + map-side-combinable SUM per round, the state broadcast
+and the arcs never moving); the personalization adds only a
 literal IN over the O(|S|) source list.
 """
 

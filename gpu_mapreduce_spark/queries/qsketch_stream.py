@@ -55,15 +55,12 @@ def _sliced_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     each, mtimes strictly increasing (the sessionize_stream
     deterministic-bus contract)."""
 
-    def build() -> str:
-        import atexit
+    def write(path: str) -> None:
         import glob
         import os
         import shutil
         import tempfile
 
-        path = tempfile.mkdtemp(prefix="qsketch_feed_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
         docs = table(spark, sf_dir, "documents").select(
             "doc_id", F.col("n_chars").cast("long").alias("val")
         )
@@ -83,9 +80,8 @@ def _sliced_stream_dir(spark: SparkSession, sf_dir: str) -> str:
             if base is None:
                 base = os.path.getmtime(target)
             os.utime(target, (base + 10 * g, base + 10 * g))
-        return path
 
-    return fixtures.derived(spark, sf_dir, "qsketch_stream_dir", build)
+    return fixtures.derived_dir(spark, sf_dir, "qsketch_stream_dir", write)
 
 
 def _rebuild_unique(rows) -> list["qsketch.QSketch | None"]:

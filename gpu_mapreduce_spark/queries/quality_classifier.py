@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from gpu_mapreduce_spark.operators import textstats as ts
 from gpu_mapreduce_spark.queries.textstats import _TOKS, _inlist, _sql_ngrams
 from gpu_mapreduce_spark.registry import register
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 _G2 = _sql_ngrams(2)
 _W = ts.CLF_W
@@ -105,10 +105,8 @@ def quality_classifier_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     # the feature projection is compute-bound and the documents parquet
     # arrives in one input split at test scale — widen to full parallelism
-    # BEFORE scoring (the textstats._wide discipline; no pushdown lost,
-    # the scorer reads every row)
-    wide = docs.repartition(spark.sparkContext.defaultParallelism)
-    scores = ts.classifier_scores(wide).localCheckpoint(eager=True)
+    # BEFORE scoring (no pushdown lost, the scorer reads every row)
+    scores = ts.classifier_scores(widen(docs)).localCheckpoint(eager=True)
     gated = docs.select("doc_id", "source").join(scores, "doc_id")
     return gated.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -83,21 +83,14 @@ def _base_sessions_at_rest(spark: SparkSession, sf_dir: str) -> str:
     by the REGISTERED transform itself and persisted — the immutable
     index the delta folds into."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
+    def write(path: str) -> None:
         t = _boundary(spark, sf_dir)
         base = _sessionize(
             _events_ms(spark, sf_dir).filter(F.col("ts_ms") < t)
         )
-        path = tempfile.mkdtemp(prefix="sessionize_base_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
         base.write.mode("overwrite").parquet(path)
-        return path
 
-    return fixtures.derived(spark, sf_dir, "sessionize_inc_base", build)
+    return fixtures.derived_dir(spark, sf_dir, "sessionize_inc_base", write)
 
 
 def fold_delta_sessions(

@@ -57,15 +57,12 @@ def _sliced_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     file source (which orders by modification time) drains them in time
     order — the time-ordered-bus contract."""
 
-    def build() -> str:
-        import atexit
+    def write(path: str) -> None:
         import glob
         import os
         import shutil
         import tempfile
 
-        path = tempfile.mkdtemp(prefix="sessionize_feed_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
         ev = table(spark, sf_dir, "events").select(
             "user_id", "event_id", F.unix_millis("ts").alias("ts_ms")
         )
@@ -89,9 +86,8 @@ def _sliced_stream_dir(spark: SparkSession, sf_dir: str) -> str:
             if base is None:
                 base = os.path.getmtime(target)
             os.utime(target, (base + 10 * i, base + 10 * i))
-        return path
 
-    return fixtures.derived(spark, sf_dir, "sessionize_stream_dir", build)
+    return fixtures.derived_dir(spark, sf_dir, "sessionize_stream_dir", write)
 
 
 @register(

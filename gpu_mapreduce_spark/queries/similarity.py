@@ -188,18 +188,12 @@ def _ivf_at_rest(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
     dir lives for the session (atexit-removed)."""
     from gpu_mapreduce_spark.sources import fixtures
 
-    def build() -> tuple[DataFrame, str]:
-        import atexit
-        import shutil
-        import tempfile
+    centroids, assigned = _ivf_index(spark, sf_dir)
 
-        centroids, assigned = _ivf_index(spark, sf_dir)
-        path = tempfile.mkdtemp(prefix="ivf_at_rest_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def write(path: str) -> None:
         assigned.write.mode("overwrite").partitionBy("cid").parquet(path)
-        return centroids, path
 
-    return fixtures.derived(spark, sf_dir, "ivf_at_rest", build)
+    return centroids, fixtures.derived_dir(spark, sf_dir, "ivf_at_rest", write)
 
 
 def ivf_assign_ctes(prefix: str = "", train_where: str = "") -> str:

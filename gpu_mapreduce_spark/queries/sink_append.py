@@ -53,25 +53,18 @@ def _packed_base(spark: SparkSession, sf_dir: str) -> str:
     as JSONL once per (session, sf_dir). Immutable for the session — the
     append query lays new delta files alongside, never rewriting these."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
+    def write(path: str) -> None:
         existing = fixtures.corpus(spark, sf_dir).filter(
             F.col("doc_id") < _SPLIT
         )
         rows = ts.pack_assignments(
             existing, capacity=_CAP, shards=_SHARDS, carry=("text",)
         )
-        path = tempfile.mkdtemp(prefix="packed_base_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
         rows.write.mode("overwrite").option(
             "ignoreNullFields", "false"
         ).partitionBy("shard").json(path)
-        return path
 
-    return fixtures.derived(spark, sf_dir, "packed_base", build)
+    return fixtures.derived_dir(spark, sf_dir, "packed_base", write)
 
 
 @register(

@@ -33,9 +33,9 @@ from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.functions.portable import hash60
 from gpu_mapreduce_spark.operators import textstats as ts
-from gpu_mapreduce_spark.queries.textstats import _TOKS, _wide
+from gpu_mapreduce_spark.queries.textstats import _TOKS
 from gpu_mapreduce_spark.registry import register
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 _D = 4  # hash rows
 _W = 16  # buckets per row — below the fixture vocab so collisions occur
@@ -97,7 +97,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     counter, so est >= cnt always and overcount isolates the collision
     error the bounded state buys."""
     toks = (
-        _wide(table(spark, sf_dir, "documents"))
+        widen(table(spark, sf_dir, "documents"))
         .select(F.explode(ts.tokens(F.col("text"))).alias("tok"))
         .localCheckpoint(eager=True)
     )

@@ -60,13 +60,7 @@ def _delta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     microbatches — the bus stand-in (swap for Kafka, nothing downstream
     changes)."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="delta_stream_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def write(path: str) -> None:
         (
             table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") % _MOD == _REM)
@@ -74,9 +68,8 @@ def _delta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        return path
 
-    return fixtures.derived(spark, sf_dir, "delta_stream_dir", build)
+    return fixtures.derived_dir(spark, sf_dir, "delta_stream_dir", write)
 
 
 @register(

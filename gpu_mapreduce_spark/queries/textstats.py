@@ -10,7 +10,7 @@ from gpu_mapreduce_spark.functions.numeric import sql_davg
 from gpu_mapreduce_spark.operators import textstats as ts
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources import fixtures
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 # DuckDB mirror of operators/textstats.tokens
 _TOKS = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')"
@@ -18,14 +18,6 @@ _TOKS = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')"
 
 def _inlist(lang: str) -> str:
     return ", ".join(f"'{w}'" for w in ts.STOPWORDS[lang])
-
-
-def _wide(df):
-    """Token/shingle passes are compute-bound and the documents parquet
-    arrives in a single input split at test scale — widen to full
-    parallelism first (SCALE.md checkpoint hygiene; no pushdown lost: these
-    queries scan every row)."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 @register(
@@ -45,7 +37,7 @@ def _wide(df):
     """,
 )
 def textstats_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ts.token_stats(_wide(table(spark, sf_dir, "documents")))
+    return ts.token_stats(widen(table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -67,7 +59,7 @@ def textstats_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def textstats_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ts.quality_score(_wide(table(spark, sf_dir, "documents")))
+    return ts.quality_score(widen(table(spark, sf_dir, "documents")))
 
 
 _LANG_CASE = f"""
@@ -95,7 +87,7 @@ _LANG_CASE = f"""
     """,
 )
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ts.lang_id(_wide(table(spark, sf_dir, "documents")))
+    return ts.lang_id(widen(table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -108,7 +100,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ts.fingerprint(_wide(table(spark, sf_dir, "documents")))
+    return ts.fingerprint(widen(table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -167,7 +159,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gpu_mapreduce_spark.functions.numeric import davg
     from gpu_mapreduce_spark.sources import fixtures as fx
 
-    corpus = _wide(fx.corpus(spark, sf_dir))
+    corpus = widen(fx.corpus(spark, sf_dir))
     keep_ids = (
         ts.fingerprint(corpus)
         .groupBy("fp")
@@ -215,7 +207,7 @@ def textstats_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     KLL-style sketch, no exact global sort."""
     from pyspark.sql import functions as F
 
-    d = _wide(table(spark, sf_dir, "documents"))
+    d = widen(table(spark, sf_dir, "documents"))
     n = ts.tokens(F.col("text"))
     counts = d.select(F.size(n).cast("int").alias("n"))
     return counts.agg(
@@ -274,7 +266,7 @@ def textstats_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filter signals (operators/textstats.
     repetition_stats): duplicate bigram/trigram fractions + top-token mass,
     scan-shaped codegen list expressions, zero Python on the row path."""
-    return ts.repetition_stats(_wide(table(spark, sf_dir, "documents")))
+    return ts.repetition_stats(widen(table(spark, sf_dir, "documents")))
 
 
 _PII_CNT = "CAST(len(regexp_extract_all(text, '{p}')) AS INT)"
@@ -306,7 +298,7 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     The patterns live in the common Java-regex/RE2 subset and the redaction
     order is fixed (operators/textstats.pii_stats), so both engines produce
     byte-identical redacted documents — md5-proven per row."""
-    return ts.pii_stats(_wide(fixtures.pii_corpus(spark, sf_dir)))
+    return ts.pii_stats(widen(fixtures.pii_corpus(spark, sf_dir)))
 
 
 @register(
@@ -336,4 +328,4 @@ def contamination_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     check exists for. Scale shape in operators/textstats.contamination:
     bounded benchmark gram set broadcast, corpus side one scan, no
     all-pairs anything."""
-    return ts.contamination(_wide(fixtures.corpus(spark, sf_dir)))
+    return ts.contamination(widen(fixtures.corpus(spark, sf_dir)))

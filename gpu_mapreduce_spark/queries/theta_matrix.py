@@ -46,7 +46,7 @@ from gpu_mapreduce_spark.functions.portable import hash60
 from gpu_mapreduce_spark.operators import dedup
 from gpu_mapreduce_spark.queries.theta_ops import _K, _SCALE, _U, theta_ops
 from gpu_mapreduce_spark.registry import register
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 # f-string: the KMV parameters interpolate from theta_ops' _K so both
 # engines share ONE constant (ADVICE r13: a hardcoded 64/63 here would
@@ -123,11 +123,8 @@ def theta_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix — sketches, thetas, survivor counts and estimates all
     gate-hashed; see module docstring."""
     docs = table(spark, sf_dir, "documents")
-    # widen before the compute-bound shingle pass (r15; the
-    # textstats._wide discipline)
-    from gpu_mapreduce_spark.queries.textstats import _wide
-
-    sh = dedup.shingle_set(_wide(docs)).join(
+    # widen before the compute-bound shingle pass (r15)
+    sh = dedup.shingle_set(widen(docs)).join(
         docs.select("doc_id", F.col("source").alias("src")), "doc_id"
     )
     hs = sh.select("src", hash60(F.col("sh")).alias("h")).distinct()

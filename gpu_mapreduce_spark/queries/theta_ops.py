@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 from gpu_mapreduce_spark.functions.portable import hash60
 from gpu_mapreduce_spark.operators import dedup
 from gpu_mapreduce_spark.registry import register
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 _K = 64
 _U = 1 << 60
@@ -102,12 +102,9 @@ def kmv_sketch_pair(docs: DataFrame, k: int = _K) -> tuple[list[int], list[int]]
     both = docs.filter(
         (F.col("doc_id") % 2 == 0) | (F.col("doc_id") % 3 == 0)
     )
-    # widen before the compute-bound shingle pass (r15; the
-    # textstats._wide discipline — one input split at test scale
-    # otherwise serializes the whole pass on one task)
-    from gpu_mapreduce_spark.queries.textstats import _wide
-
-    sh = dedup.shingle_set(_wide(both))
+    # widen before the compute-bound shingle pass (r15; one input split
+    # at test scale otherwise serializes the whole pass on one task)
+    sh = dedup.shingle_set(widen(both))
     tagged = sh.select(
         F.explode(
             F.expr(

@@ -48,13 +48,7 @@ def _src_dir(spark: SparkSession, sf_dir: str) -> str:
     _N_SRC_FILES files — a RANDOM split, because KMV's fold is
     order-independent (the claim under test)."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="theta_stream_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def write(path: str) -> None:
         (
             table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 2 == 0)
@@ -63,9 +57,8 @@ def _src_dir(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        return path
 
-    return fixtures.derived(spark, sf_dir, "theta_stream_dir", build)
+    return fixtures.derived_dir(spark, sf_dir, "theta_stream_dir", write)
 
 
 @register(

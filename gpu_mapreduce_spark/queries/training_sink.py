@@ -30,7 +30,7 @@ from gpu_mapreduce_spark.operators import textstats as ts
 from gpu_mapreduce_spark.plans.scratch import sink_roundtrip
 from gpu_mapreduce_spark.queries.packing import _CAP, _SHARDS, _TOKS
 from gpu_mapreduce_spark.registry import register
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 
 @register(
@@ -67,9 +67,7 @@ def packed_shards_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     with an md5 digest over the doc_id:md5(text) sequence in doc_id order.
     The digest covers membership, assignment, and byte content of every
     document in every shard — the sink is proven, not assumed, lossless."""
-    from gpu_mapreduce_spark.queries.textstats import _wide
-
-    docs = _wide(table(spark, sf_dir, "documents"))
+    docs = widen(table(spark, sf_dir, "documents"))
 
     def build(path: str) -> DataFrame:
         rows = ts.pack_assignments(

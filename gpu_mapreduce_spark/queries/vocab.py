@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.operators import textstats as ts
 from gpu_mapreduce_spark.registry import register
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources.tables import table, widen
 
 _TOP = 32
 
@@ -47,9 +47,7 @@ def vocab_topk_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     and whitelisted as such in tests/test_plan_audit.py. At 100 TB the
     shuffle carries one row per (partition, distinct token) — the
     standard wordfreq scaling argument, here over the sub-word alphabet."""
-    d = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = widen(table(spark, sf_dir, "documents"))
     freq = (
         d.select(F.explode(ts.bpe_ish_tokens(F.col("text"))).alias("t"))
         .groupBy("t")

@@ -54,24 +54,18 @@ def _zorder_existing_at_rest(spark: SparkSession, sf_dir: str) -> str:
     immutable base root appends lay files alongside — the
     _ivfpq_existing_at_rest pattern)."""
 
-    def build() -> str:
-        import atexit
-        import tempfile
-
+    def write(path: str) -> None:
         zed = zed_events(spark, sf_dir).filter(
             F.col("event_id") % _MOD != _REM
         )
-        path = tempfile.mkdtemp(prefix="zorder_base_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
         (
             zed.repartition(F.col("zcell"))
             .write.mode("overwrite")
             .partitionBy("zcell")
             .parquet(path)
         )
-        return path
 
-    return fixtures.derived(spark, sf_dir, "zorder_existing_at_rest", build)
+    return fixtures.derived_dir(spark, sf_dir, "zorder_existing_at_rest", write)
 
 
 def partial_compact(

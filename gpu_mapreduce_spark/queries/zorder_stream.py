@@ -52,13 +52,7 @@ def _zdelta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     of timestamp-roundtrip concerns; the oracle replays the projection
     from raw events either way."""
 
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="zdelta_stream_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def write(path: str) -> None:
         (
             zed_events(spark, sf_dir)
             .filter(F.col("event_id") % _MOD == _REM)
@@ -66,9 +60,8 @@ def _zdelta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        return path
 
-    return fixtures.derived(spark, sf_dir, "zdelta_stream_dir", build)
+    return fixtures.derived_dir(spark, sf_dir, "zdelta_stream_dir", write)
 
 
 @register(

@@ -21,6 +21,10 @@ factor). `edges` = canonicalized via edge_upper semantics
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -274,6 +278,22 @@ def derived(spark: SparkSession, sf_dir: str, name: str, builder):
     if key not in _DERIVED_CACHE:
         _DERIVED_CACHE[key] = builder()
     return _DERIVED_CACHE[key]
+
+
+def derived_dir(spark: SparkSession, sf_dir: str, name: str, write) -> str:
+    """Session-memoized at-rest directory: a fresh temp dir that
+    `write(path)` fills once per (session, sf_dir, name) — memoized through
+    `derived` under the same key — and that is removed at interpreter exit.
+    Returns the path. The cluster-scale analog is an artifact persisted
+    once at ingest."""
+
+    def build() -> str:
+        path = tempfile.mkdtemp(prefix=f"{name}_")
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+        write(path)
+        return path
+
+    return derived(spark, sf_dir, name, build)
 
 
 def edges_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:

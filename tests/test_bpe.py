@@ -8,6 +8,7 @@ from __future__ import annotations
 import re
 from collections import Counter
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -232,6 +233,22 @@ def test_fertility_units_matches_model(spark):
         for r in bpe.fertility_units(df, merges).collect()
     }
     assert got == want
+
+
+
+def test_apply_merge_rejects_non_word_tokens(spark):
+    """The merge pair is spliced into a SQL literal, so a token outside
+    WORD_RE must raise ValueError (not an assert: it must hold under
+    python -O) — a quote breaks out of the literal, and a non-ASCII letter
+    passes str.isalnum but can never come out of the tokenizer."""
+    words = spark.createDataFrame([("w", " a b")], "w string, s string")
+    for bad in ("a'b", "é", "", "A"):
+        with pytest.raises(ValueError, match="apply_merge"):
+            bpe.apply_merge(words, bad, "b")
+        with pytest.raises(ValueError, match="apply_merge"):
+            bpe.apply_merge(words, "a", bad)
+    got = bpe.apply_merge(words, "a", "b").collect()
+    assert [(r.w, r.s) for r in got] == [("w", " ab")]
 
 
 def test_merge_diff_ranks():

@@ -113,153 +113,6 @@ def test_neigh_tri_sink_one_dir_per_vertex(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, nt.collect()))
 
 
-def _exchange_above_arcs(plan: str) -> bool:
-    """True if the formatted plan re-shuffles the bucketed arc scan — i.e.
-    an Exchange whose child subtree contains the bucketed parquet scan."""
-    import re
-
-    # formatted explain: operator tree first; bucketed scans print
-    # "Bucketed: true" in the scan details. We check the simple string
-    # property that matters: some Exchange keyed on src would appear as
-    # 'Exchange hashpartitioning(src'.
-    return bool(re.search(r"Exchange hashpartitioning\(src", plan))
-
-
-def test_cc_find_bucketed_shuffle_path_matches_broadcast(spark):
-    """The beyond-broadcast-|V| path (bucketed-by-src arcs + SHUFFLE_HASH
-    state join) must produce bit-identical components to the default
-    broadcast path, with no broadcast of state and no arc-side shuffle in
-    the per-round join."""
-    edges = fixtures.edges_materialized(spark, SF_DIR)
-    cc_b, rounds_b = graph_iter.cc_find(edges)
-    barcs = graph_iter.prepare_arcs_bucketed(edges, tag="testgraph")
-    cc_s, rounds_s = graph_iter.cc_find(
-        edges, arcs=barcs, broadcast_state=False
-    )
-    assert rounds_b == rounds_s
-    assert sorted(map(tuple, cc_b.collect())) == sorted(map(tuple, cc_s.collect()))
-    # plan shape of one round: shuffle-hash join, no broadcast join of the
-    # state, no exchange re-partitioning the bucketed arc side by src
-    labels = barcs.select(F.col("src").alias("v")).distinct().select(
-        "v", F.col("v").alias("label")
-    )
-    joined = (
-        barcs.join(labels.hint("shuffle_hash"), barcs.src == labels.v)
-        .groupBy(F.col("dst").alias("nv"))
-        .agg(F.min("label").alias("ml"))
-    )
-    plan = joined._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "ShuffledHashJoin" in plan, plan
-    assert "BroadcastHashJoin" not in plan, plan
-    assert "Bucketed: true" in plan, plan
-    assert not _exchange_above_arcs(plan), plan
-
-
-def test_pagerank_bucketed_shuffle_path_matches_broadcast(spark):
-    edges = fixtures.edges_materialized(spark, SF_DIR)
-    pr_b = graph_iter.pagerank(edges, num_iter=3).collect()
-    adn = graph_iter.prepare_arcs_deg_bucketed(edges, tag="testgraph")
-    pr_s = graph_iter.pagerank(
-        edges, num_iter=3, arcs_deg_n=adn, broadcast_state=False
-    ).collect()
-    assert sorted(map(tuple, pr_b)) == sorted(map(tuple, pr_s))
-
-
-def test_luby_bucketed_shuffle_path_matches_broadcast(spark):
-    edges = fixtures.edges_materialized(spark, SF_DIR)
-    mis_b, rounds_b = graph_iter.luby_find(edges)
-    barcs = graph_iter.prepare_arcs_bucketed(edges, tag="testgraph")
-    mis_s, rounds_s = graph_iter.luby_find(
-        edges, arcs=barcs, broadcast_state=False
-    )
-    assert rounds_b == rounds_s
-    assert sorted(r.v for r in mis_b.collect()) == sorted(
-        r.v for r in mis_s.collect()
-    )
-
-
-def test_sssp_bucketed_shuffle_path_matches_broadcast(spark):
-    """sssp/sssp_multi were the last iterative algorithms without a
-    beyond-broadcast path (VERDICT r04 'What's missing' #2): the frontier is
-    tiny at the fringes but O(|V|) mid-BFS on a low-diameter graph. The
-    bucketed-warcs + shuffle-hash frontier join must be bit-identical to the
-    broadcast default, in the same number of rounds."""
-    e = fixtures.edges_materialized(spark, SF_DIR)
-    wu = e.select(
-        "src",
-        "dst",
-        ((F.col("src") * 31 + F.col("dst")) % 97 + 1).cast("bigint").alias("wu"),
-    )
-    warcs = graph_iter.weighted_arcs(wu)
-    d_b, rounds_b = graph_iter.sssp(warcs, 0)
-    bwarcs = graph_iter.prepare_warcs_bucketed(warcs, tag="testgraph")
-    d_s, rounds_s = graph_iter.sssp(
-        warcs, 0, arcs=bwarcs, broadcast_state=False
-    )
-    assert rounds_b == rounds_s
-    assert sorted(map(tuple, d_b.collect())) == sorted(map(tuple, d_s.collect()))
-    # one frontier-relaxation round in the bucketed mode: shuffle-hash join,
-    # no broadcast of the frontier, no exchange re-shuffling the bucketed
-    # arc scan by src
-    frontier = bwarcs.select(F.col("src").alias("v")).distinct().limit(50).select(
-        "v", F.lit(0).cast("bigint").alias("du")
-    )
-    one = (
-        bwarcs.join(frontier.hint("shuffle_hash"), frontier.v == bwarcs.src)
-        .groupBy(F.col("dst").alias("cv"))
-        .agg(F.min(F.col("du") + F.col("wu")).alias("nd"))
-    )
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan, plan
-    assert "BroadcastHashJoin" not in plan, plan
-    assert not _exchange_above_arcs(plan), plan
-
-    m_b, mrounds_b = graph_iter.sssp_multi(warcs, [0, 1, 2])
-    m_s, mrounds_s = graph_iter.sssp_multi(
-        warcs, [0, 1, 2], arcs=bwarcs, broadcast_state=False
-    )
-    assert mrounds_b == mrounds_s
-    assert sorted(map(tuple, m_b.collect())) == sorted(map(tuple, m_s.collect()))
-
-
-def test_tri_count_no_broadcast_path_matches(spark):
-    """The triangle adjacency probe's broadcast is now a parameter
-    (VERDICT r04 'What's missing' #3): broadcast_adj=False must count the
-    same triangles through a key-partitioned shuffle-hash lookup, with no
-    broadcast join in the plan."""
-    edges = fixtures.edges_materialized(spark, SF_DIR)
-    adj = graph.oriented_adj(edges).localCheckpoint(eager=True)
-    n_b = graph.tri_count(adj=adj).collect()[0].ntri
-    shuffled = graph.tri_count(adj=adj, broadcast_adj=False)
-    n_s = shuffled.collect()[0].ntri
-    assert n_b == n_s and n_b > 0
-    plan = shuffled._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan, plan
-    assert "BroadcastHashJoin" not in plan, plan
-    t_b = sorted(map(tuple, graph.tri_find(adj=adj).collect()))
-    t_s = sorted(
-        map(tuple, graph.tri_find(adj=adj, broadcast_adj=False).collect())
-    )
-    assert t_b == t_s
-
-
-def test_bucketed_arcs_memo_keyed_by_input(spark):
-    """Regression (VERDICT r04 'What's wrong' #1): two DIFFERENT edge sets
-    passing the same `tag` in one session must get two bucketed tables, not
-    silently share whichever was written first."""
-    e1 = spark.createDataFrame([(1, 2), (2, 3)], "src bigint, dst bigint")
-    e2 = spark.createDataFrame([(10, 20)], "src bigint, dst bigint")
-    b1 = graph_iter.prepare_arcs_bucketed(e1, tag="collide")
-    b2 = graph_iter.prepare_arcs_bucketed(e2, tag="collide")
-    assert sorted(map(tuple, b1.collect())) == [(1, 2), (2, 1), (2, 3), (3, 2)]
-    assert sorted(map(tuple, b2.collect())) == [(10, 20), (20, 10)]
-    # and the memo still hits for a repeated identical input
-    b1_again = graph_iter.prepare_arcs_bucketed(e1, tag="collide")
-    assert sorted(map(tuple, b1_again.collect())) == sorted(map(tuple, b1.collect()))
-
-
 def test_neighbor_grouped_iterator_escape_matches(spark):
     """SCALE.md 'known caps': neighbor()'s collect_list needs each vertex's
     adjacency to fit one aggregation buffer; for celebrity vertices the
@@ -301,10 +154,9 @@ def test_kcore_invariants_and_paths(spark):
     """k-core output invariants on the edges fixture: every member's
     core-induced degree is >= k, the 25-nation clique (a 24-core by
     construction) is fully inside the 24-core, and degrees are consistent
-    with a recomputation over the returned membership. The bucketed
-    shuffle-hash state path must match the broadcast path bit-for-bit."""
+    with a recomputation over the returned membership."""
     edges = fixtures.edges_materialized(spark, SF_DIR)
-    core, rounds = graph_iter.kcore(edges, k=24)
+    core, _rounds = graph_iter.kcore(edges, k=24)
     rows = {r.v: r.core_deg for r in core.collect()}
     assert rows, "24-core empty despite the embedded 25-clique"
     assert all(d >= 24 for d in rows.values())
@@ -315,27 +167,6 @@ def test_kcore_invariants_and_paths(spark):
     for v in member:
         deg = sum(1 for (s, d) in arcs if s == v and d in member)
         assert deg == rows[v]
-    barcs = graph_iter.prepare_arcs_bucketed(edges, tag="testgraph")
-    core_s, rounds_s = graph_iter.kcore(
-        edges, k=24, arcs=barcs, broadcast_state=False
-    )
-    assert rounds == rounds_s
-    assert sorted(map(tuple, core.collect())) == sorted(
-        map(tuple, core_s.collect())
-    )
-    # the bucketed path's per-round plan must not move the arc side: its
-    # single arc join is keyed on src, which the at-rest bucketing already
-    # provides (the dst-keyed groupBy exchanges only V-row partials). An
-    # earlier kcore semi-joined arcs on BOTH endpoints — the dst-side join
-    # re-shuffled the whole O(|E|) arc table every round; this pins the fix.
-    surv = barcs.select(F.col("src").alias("v")).distinct().hint("shuffle_hash")
-    one_round = (
-        barcs.join(surv, barcs.src == surv.v, "left_semi")
-        .groupBy(F.col("dst").alias("v"))
-        .count()
-    )
-    plan = one_round._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning(src" not in plan, plan
 
 
 def test_ktruss_model(spark):
@@ -635,45 +466,6 @@ def test_jp_coloring_matches_simulation_and_is_proper(spark):
     )
     with _pytest.raises(ValueError, match="packing envelope"):
         graph_iter.jp_coloring(big)
-
-
-def test_jp_coloring_bucketed_shuffle_path_matches_broadcast(spark):
-    """The beyond-broadcast-|V| path for jp_coloring (r11 ADVICE: round 1's
-    uncolored set is ALL of |V|, so the hard-coded state broadcast was the
-    scale ceiling): bucketed-by-src arcs + SHUFFLE_HASH state hint must
-    color bit-identically to the broadcast path in the same round count,
-    and the per-round state ⋈ arcs join must be a ShuffledHashJoin with no
-    broadcast and no arc-side exchange."""
-    pairs = [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (4, 5), (1, 5)]
-    edges = spark.createDataFrame(pairs, "src bigint, dst bigint")
-    col_b, rounds_b = graph_iter.jp_coloring(edges)
-    barcs = graph_iter.prepare_arcs_bucketed(edges, tag="jpgraph")
-    col_s, rounds_s = graph_iter.jp_coloring(
-        edges, arcs=barcs, broadcast_state=False
-    )
-    assert rounds_b == rounds_s
-    assert sorted(map(tuple, col_b.collect())) == sorted(
-        map(tuple, col_s.collect())
-    )
-    # plan shape of one jp round's local-max join (the operator's exact
-    # join orientation: state on arcs.src, neighbors off dst)
-    un_s = (
-        barcs.select(F.col("src").alias("uv"))
-        .distinct()
-        .select("uv", F.col("uv").alias("up"))
-    )
-    joined = (
-        barcs.join(un_s.hint("shuffle_hash"), barcs.src == un_s.uv)
-        .groupBy(F.col("dst").alias("v"))
-        .agg(F.max("up").alias("nmax"))
-    )
-    plan = joined._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "ShuffledHashJoin" in plan, plan
-    assert "BroadcastHashJoin" not in plan, plan
-    assert "Bucketed: true" in plan, plan
-    assert not _exchange_above_arcs(plan), plan
 
 
 def test_personalized_pagerank_matches_python_twin(spark):

@@ -80,13 +80,13 @@ def test_contamination_bloom_prunes_and_matches(spark):
     from pyspark.sql import functions as F
 
     from gpu_mapreduce_spark.operators import textstats as ts
-    from gpu_mapreduce_spark.queries.textstats import _wide
+    from gpu_mapreduce_spark.sources.tables import widen
     from gpu_mapreduce_spark.sources import fixtures
     from tests.conftest import SF_DIR
 
     from gpu_mapreduce_spark.functions.portable import hash60
 
-    corpus = _wide(fixtures.corpus(spark, SF_DIR))
+    corpus = widen(fixtures.corpus(spark, SF_DIR))
     exact = sorted(map(tuple, ts.contamination(corpus).collect()))
     bloom = sorted(map(tuple, ts.contamination_bloom(corpus).collect()))
     # string-keyed and hash-keyed reports agree (no 60-bit collisions in
