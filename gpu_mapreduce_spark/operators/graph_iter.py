@@ -30,17 +30,25 @@ existed and was removed unused; git history holds it. min/sum are
 algebraic → map-side combine bounds hot vertices; the reference needed
 hand-rolled zone splitting for exactly this (oink/cc_find.cpp:43-55). AQE
 skew-join covers the rest.
+
+Loop state: every snapshot here goes through plans.iterate.materialize —
+eager checkpoint, the round's one driver scalar observed in the same
+action, the superseded snapshot freed. An operator frees every snapshot it
+made that its result does not read (superseded round states, an arc table
+it built itself, a final empty frontier), and running out of rounds
+raises RuntimeError instead of returning a truncated state.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.operators.graph import bidirect
 from gpu_mapreduce_spark.plans.iterate import (
     fixpoint_observed,
     iterate_n,
+    materialize,
     unpersist_checkpoint,
 )
 
@@ -58,9 +66,7 @@ def _ckpt_by_dst(df: DataFrame) -> DataFrame:
     plan — but it ships almost nothing. Measured: pagerank 8->5.4s at sf0.1.)
     On a cluster this is 'bucket the arc table by dst at rest'."""
     sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism, "dst").localCheckpoint(
-        eager=True
-    )
+    return materialize(df.repartition(sc.defaultParallelism, "dst"))[0]
 
 
 def prepare_arcs(edges: DataFrame) -> DataFrame:
@@ -86,19 +92,17 @@ def prepare_arcs_deg(edges: DataFrame) -> tuple[DataFrame, int]:
     aggregate runs once and the annotation join reads the materialized
     table."""
     arcs = bidirect(edges)
-    obs = Observation()
-    deg = (
-        arcs.groupBy(F.col("src").alias("v"))
-        .agg(F.count(F.lit(1)).alias("outdeg"))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    deg, n = materialize(
+        arcs.groupBy(F.col("src").alias("v")).agg(
+            F.count(F.lit(1)).alias("outdeg")
+        ),
+        F.count(F.lit(1)),
     )
-    n = int(obs.get["n"])
     arcs_deg = _ckpt_by_dst(
         arcs.join(deg, arcs.src == deg.v).select("src", "dst", "outdeg")
     )
     unpersist_checkpoint(deg)  # folded into arcs_deg; no later consumer
-    return arcs_deg, n
+    return arcs_deg, int(n)
 
 
 def cc_find(
@@ -115,8 +119,8 @@ def cc_find(
     component, matching the reference's winning-smaller-zone rule
     (reduce_zone_winner).
     """
-    if arcs is None:
-        arcs = prepare_arcs(edges)
+    own_arcs = arcs is None
+    arcs = prepare_arcs(edges) if own_arcs else arcs
     labels = (
         arcs.select(F.col("src").alias("v"))
         .distinct()
@@ -148,6 +152,8 @@ def cc_find(
         lambda n_changed: n_changed == 0,
         max_iter,
     )
+    if own_arcs:
+        unpersist_checkpoint(arcs)  # the checkpointed fixpoint reads none
     return fix.select("v", F.col("label").alias("zone")), rounds
 
 
@@ -183,8 +189,8 @@ def kcore(
     Returns ((v, core_deg) for vertices in the k-core, rounds run);
     core_deg is the vertex's degree inside the core-induced subgraph.
     """
-    if arcs is None:
-        arcs = prepare_arcs(edges)
+    own_arcs = arcs is None
+    arcs = prepare_arcs(edges) if own_arcs else arcs
     deg0 = arcs.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).alias("core_deg")
     )
@@ -211,6 +217,8 @@ def kcore(
         lambda n_below: n_below == 0,
         max_iter,
     )
+    if own_arcs:
+        unpersist_checkpoint(arcs)
     return fix, rounds
 
 
@@ -237,8 +245,8 @@ def label_propagation(
     O(|V|) as communities coalesce.
 
     Returns (v, label) after exactly `rounds` rounds."""
-    if arcs is None:
-        arcs = prepare_arcs(edges)
+    own_arcs = arcs is None
+    arcs = prepare_arcs(edges) if own_arcs else arcs
     labels = (
         arcs.select(F.col("src").alias("v"))
         .distinct()
@@ -264,7 +272,10 @@ def label_propagation(
             .select(F.col("nv").alias("v"), (-F.col("mx.nl")).alias("label"))
         )
 
-    return iterate_n(labels, step, rounds)
+    out = iterate_n(labels, step, rounds)
+    if own_arcs:
+        unpersist_checkpoint(arcs)
+    return out
 
 
 def weighted_arcs(wedges: DataFrame) -> DataFrame:
@@ -300,8 +311,8 @@ def sssp(
     broadcast side, as in cc_find/pagerank/luby_find/kcore (module
     docstring). Returns ((v, du) for *reached* vertices, rounds).
     """
-    if arcs is None:
-        arcs = prepare_warcs(warcs)
+    own_arcs = arcs is None
+    arcs = prepare_warcs(warcs) if own_arcs else arcs
     spark = arcs.sparkSession
     dist0 = spark.createDataFrame(
         [(source, 0, True)], "v bigint, du bigint, changed boolean"
@@ -327,6 +338,8 @@ def sssp(
         lambda n_changed: n_changed == 0,
         max_iter,
     )
+    if own_arcs:
+        unpersist_checkpoint(arcs)
     return fix.select("v", "du"), rounds
 
 
@@ -348,8 +361,8 @@ def sssp_multi(
     broadcast frontier as sssp() — the keyed frontier is |sources| times
     bigger, so the broadcast ceiling arrives correspondingly sooner here. Returns ((s, v, du) for reached vertices,
     rounds)."""
-    if arcs is None:
-        arcs = prepare_warcs(warcs)
+    own_arcs = arcs is None
+    arcs = prepare_warcs(warcs) if own_arcs else arcs
     spark = arcs.sparkSession
     dist0 = spark.createDataFrame(
         [(s, s, 0, True) for s in sources],
@@ -379,6 +392,8 @@ def sssp_multi(
         lambda n_changed: n_changed == 0,
         max_iter,
     )
+    if own_arcs:
+        unpersist_checkpoint(arcs)
     return fix.select("s", "v", "du"), rounds
 
 
@@ -440,6 +455,8 @@ def pagerank(
     # + agg per round — cheap to replay, and fewer materializations wins
     # (measured best cadence at sf0.1: ce3 4.3s vs ce1 5.8s vs ce2 5.0s)
     out = iterate_n(ranks0, step, num_iter, checkpoint_every=3)
+    if arcs_deg_n is None:
+        unpersist_checkpoint(arcs_deg)  # the last round is checkpointed
     return out.select(
         "v",
         F.col("r").alias("rank_units"),
@@ -485,8 +502,8 @@ def forest_fire_sample(
         )
     if not seeds:
         raise ValueError("forest_fire_sample: empty seed set")
-    if arcs is None:
-        arcs = prepare_arcs(edges)
+    own_arcs = arcs is None
+    arcs = prepare_arcs(edges) if own_arcs else arcs
     spark = arcs.sparkSession
     # seed validation (r12 ADVICE, the personalized_pagerank loud-failure
     # discipline): a seed absent from the graph burns but never expands —
@@ -506,11 +523,11 @@ def forest_fire_sample(
             f" source set (no arcs to expand): {missing}"
         )
     thresh = t_num * (1 << 53) // t_den
-    burned = spark.createDataFrame(
-        [(v,) for v in seeds], "v bigint"
-    ).localCheckpoint(eager=True)
+    burned, _ = materialize(
+        spark.createDataFrame([(v,) for v in seeds], "v bigint")
+    )
     frontier = burned
-    sampled: list[DataFrame] = []
+    sampled: list[DataFrame] = []  # read by the result: never freed
     for r in range(1, rounds + 1):
         fr = frontier.select(F.col("v").alias("fv"))
         cand = (
@@ -530,15 +547,23 @@ def forest_fire_sample(
                 F.col("dst").cast("string"),
             )
         )
-        surv = (
-            cand.filter(F.shiftrightunsigned(h, 7) < F.lit(thresh))
-            .select(F.lit(r).cast("int").alias("r"), "src", "dst")
-            .localCheckpoint(eager=True)
+        surv, _ = materialize(
+            cand.filter(F.shiftrightunsigned(h, 7) < F.lit(thresh)).select(
+                F.lit(r).cast("int").alias("r"), "src", "dst"
+            )
         )
         sampled.append(surv)
+        if r == rounds:  # the last round's burned/frontier feed nothing
+            break
         new = surv.select(F.col("dst").alias("v")).distinct()
-        burned = burned.unionAll(new).localCheckpoint(eager=True)
-        frontier = new.localCheckpoint(eager=True)
+        # round 1's frontier IS the seed snapshot burned supersedes, so it
+        # is freed once (the second unpersist is a no-op)
+        burned, _ = materialize(burned.unionAll(new), supersedes=burned)
+        frontier, _ = materialize(new, supersedes=frontier)
+    unpersist_checkpoint(burned)
+    unpersist_checkpoint(frontier)
+    if own_arcs:
+        unpersist_checkpoint(arcs)
     out = sampled[0]
     for s in sampled[1:]:
         out = out.unionAll(s)
@@ -633,6 +658,8 @@ def personalized_pagerank(
         )
 
     out = iterate_n(ranks0, step, num_iter, checkpoint_every=3)
+    if arcs_deg_n is None:
+        unpersist_checkpoint(arcs_deg)
     return out.select(
         "v",
         F.col("r").alias("ppr_units"),
@@ -663,8 +690,8 @@ def luby_find(
     (queries/rmat_gen._luby_oracle).
 
     Returns ((v) MIS members, rounds)."""
-    if arcs is None:
-        arcs = prepare_arcs(edges)
+    own_arcs = arcs is None
+    arcs = prepare_arcs(edges) if own_arcs else arcs
     verts = arcs.select(F.col("src").alias("v")).distinct()
     # status: 'u' undecided / 'i' in MIS / 'o' out (a MIS neighbor)
     state0 = verts.select(
@@ -732,6 +759,8 @@ def luby_find(
         lambda n_undecided: n_undecided == 0,
         max_iter,
     )
+    if own_arcs:
+        unpersist_checkpoint(arcs)
     return fix.filter(F.col("status") == "i").select("v"), rounds
 
 
@@ -842,14 +871,7 @@ def ktruss_edges(
     # current, degree), while the per-round cost drops by the whole
     # degree-recompute + two annotation joins the old re-orientation paid
     # (measured 5.4-6.4 s -> see BASELINE.md on the registered query).
-    obs0 = Observation()
-    cur = (
-        graph._orient(canon)
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_cur = obs0.get["n"]
-    rounds = 0
+    cur, n_cur = materialize(graph._orient(canon), F.count(F.lit(1)))
     if n_cur == 0:
         return (
             cur.select(
@@ -857,20 +879,17 @@ def ktruss_edges(
                 F.col("hi").alias("dst"),
                 F.lit(0).cast("bigint").alias("support"),
             ),
-            rounds,
+            0,
         )
-    prev_ckpt = cur  # the checkpointed DF backing the current round
-    for _ in range(max_rounds):
-        rounds += 1
+    snap = cur  # the checkpointed DF backing the current round
+    for rounds in range(1, max_rounds + 1):
         supp = edge_support(cur)
         # keep carries the support column so the converged exit needs NO
         # extra triangle pass (see docstring: at a fixed point the support
         # computed on cur is the final subgraph's support). The surviving
         # edge count — the ONE driver scalar per round — is observed
-        # during the checkpoint materialization itself (r14: the separate
-        # keep.count() job re-scanned the checkpointed set every round).
-        obs = Observation()
-        keep = (
+        # during the checkpoint materialization itself.
+        snap, n_new = materialize(
             cur.select(
                 "lo",
                 "hi",
@@ -887,16 +906,13 @@ def ktruss_edges(
                 .cast("bigint")
                 .alias("support"),
             )
-            .filter(F.col("support") >= k - 2)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .filter(F.col("support") >= k - 2),
+            F.count(F.lit(1)),
+            supersedes=snap,
         )
-        n_new = obs.get["n"]
-        unpersist_checkpoint(prev_ckpt)  # superseded round snapshot
-        prev_ckpt = keep
         if n_new == n_cur or n_new == 0:
-            return keep.select("src", "dst", "support"), rounds
-        cur = keep.select("lo", "hi")
+            return snap.select("src", "dst", "support"), rounds
+        cur = snap.select("lo", "hi")
         n_cur = n_new
     raise RuntimeError(
         f"ktruss_edges(k={k}): no fixed point within max_rounds="
@@ -943,16 +959,18 @@ def betweenness_sources(
     side broadcasts, as in sssp_multi. Raises on max_depth exhaustion (a truncated BFS
     tree silently undercounts every dependency — the ktruss_edges
     discipline)."""
-    if arcs is None:
-        arcs = prepare_arcs(edges)
+    own_arcs = arcs is None
+    arcs = prepare_arcs(edges) if own_arcs else arcs
     spark = arcs.sparkSession
-    layer0 = spark.createDataFrame(
-        [(s, s, 1) for s in sources], "s bigint, v bigint, sigma bigint"
-    ).localCheckpoint(eager=True)
+    layer0, _ = materialize(
+        spark.createDataFrame(
+            [(s, s, 1) for s in sources], "s bigint, v bigint, sigma bigint"
+        )
+    )
     layers = [layer0]
-    visited = layer0.select(
-        F.col("s").alias("ts"), F.col("v").alias("tv")
-    ).localCheckpoint(eager=True)
+    visited, _ = materialize(
+        layer0.select(F.col("s").alias("ts"), F.col("v").alias("tv"))
+    )
     depth = 0
     for _ in range(max_depth):
         cur = layers[-1]
@@ -961,26 +979,26 @@ def betweenness_sources(
             .groupBy(F.col("s"), F.col("dst").alias("nv"))
             .agg(F.sum("sigma").alias("sigma"))
         )
-        obs = Observation()
-        nxt = (
+        # frontier size observed during the checkpoint itself
+        nxt, n_new = materialize(
             nxt.join(
                 visited,
                 (nxt.s == F.col("ts")) & (nxt.nv == F.col("tv")),
                 "left_anti",
-            )
-            .select("s", F.col("nv").alias("v"), "sigma")
-            # frontier size observed during the checkpoint itself —
-            # zero extra probe jobs (the fixpoint_observed discipline)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            ).select("s", F.col("nv").alias("v"), "sigma"),
+            F.count(F.lit(1)),
         )
-        if obs.get["n"] == 0:
+        if n_new == 0:
+            unpersist_checkpoint(nxt)
             break
         depth += 1
         layers.append(nxt)
-        visited = visited.unionAll(
-            nxt.select(F.col("s").alias("ts"), F.col("v").alias("tv"))
-        ).localCheckpoint(eager=True)
+        visited, _ = materialize(
+            visited.unionAll(
+                nxt.select(F.col("s").alias("ts"), F.col("v").alias("tv"))
+            ),
+            supersedes=visited,
+        )
     else:
         raise RuntimeError(
             f"betweenness_sources: BFS not exhausted within max_depth="
@@ -988,13 +1006,19 @@ def betweenness_sources(
             " so it is never returned; raise max_depth"
         )
 
+    unpersist_checkpoint(visited)
+    if depth > 0:  # layer 0 holds the sources, which take no dependency
+        unpersist_checkpoint(layer0)
+
     # backward: deepest layer has delta 0; each shallower layer folds its
-    # successors' (sigma, delta) through the fixed-point dependency rule
+    # successors' (sigma, delta) through the fixed-point dependency rule.
+    # Every part is read by the result; layer d is freed once its own
+    # part is materialized, except the deepest, which parts[0] reads.
     dd = layers[depth].select(
         "s", "v", "sigma", F.lit(0).cast("bigint").alias("delta")
     )
     parts = [] if depth == 0 else [dd]
-    for d in range(depth - 1, -1, -1):
+    for d in range(depth - 1, 0, -1):
         wside = dd.select(
             F.col("s").alias("ws"),
             F.col("v").alias("wv"),
@@ -1022,25 +1046,26 @@ def betweenness_sources(
                 .alias("nd")
             )
         )
-        dd = (
+        dd, _ = materialize(
             uside.join(
                 contrib,
                 (uside.s == F.col("cs")) & (uside.v == F.col("cv")),
                 "left",
-            )
-            .select(
+            ).select(
                 uside.s,
                 uside.v,
                 "sigma",
                 F.coalesce(F.col("nd"), F.lit(0))
                 .cast("bigint")
                 .alias("delta"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            supersedes=uside,
         )
-        if d >= 1:
-            parts.append(dd)
+        parts.append(dd)
+    if own_arcs:
+        unpersist_checkpoint(arcs)
     if not parts:
+        unpersist_checkpoint(layer0)
         empty = spark.createDataFrame([], "v bigint, bc_u bigint")
         return empty, depth
     allv = parts[0]
@@ -1104,7 +1129,7 @@ def boruvka_msf(
             "boruvka_msf packing envelope: needs 0 <= src/dst < 2^20 and"
             " 0 <= wu < 2^22 (re-pack for bigger graphs)"
         )
-    canon = (
+    canon, _ = materialize(
         wedges.select(
             F.least("src", "dst").alias("src"),
             F.greatest("src", "dst").alias("dst"),
@@ -1113,17 +1138,15 @@ def boruvka_msf(
         .filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.min("wu").alias("wu"))  # parallel edges: keep the lightest
-        .localCheckpoint(eager=True)
     )
     spark = canon.sparkSession
-    comp = (
+    comp, _ = materialize(
         canon.select(F.col("src").alias("v"))
         .unionAll(canon.select(F.col("dst").alias("v")))
         .distinct()
         .select("v", F.col("v").alias("c"))
-        .localCheckpoint(eager=True)
     )
-    forest_parts: list[DataFrame] = []
+    forest_parts: list[DataFrame] = []  # read by the result: never freed
     rounds = 0
     max_jumps_used = 0  # effective (moved > 0) jumps in the worst round
     for _ in range(max_rounds):
@@ -1147,15 +1170,15 @@ def boruvka_msf(
         # min packed key decodes to the edge, min_by carries the other
         # endpoint's component (pk is unique within a component — each
         # edge contributes its two directions to two DIFFERENT mc groups)
-        obs = Observation()
-        m = (
-            arcs2.groupBy("mc")
-            .agg(F.min("pk").alias("mpk"), F.min_by("oc", "pk").alias("oc"))
-            # emptiness observed during the checkpoint — no probe job
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        # emptiness observed during the checkpoint — no probe job
+        m, n_m = materialize(
+            arcs2.groupBy("mc").agg(
+                F.min("pk").alias("mpk"), F.min_by("oc", "pk").alias("oc")
+            ),
+            F.count(F.lit(1)),
         )
-        if obs.get["n"] == 0:  # no cross-component edges anywhere: done
+        if n_m == 0:  # no cross-component edges anywhere: done
+            unpersist_checkpoint(m)
             break
         rounds += 1
         # decode with INTEGER division: `/` is DOUBLE division in Spark,
@@ -1191,7 +1214,7 @@ def boruvka_msf(
             .alias("p"),
         )
         # isolated components (no cross edge) point to themselves
-        par = (
+        hooked, _ = materialize(
             comp.select(F.col("c").alias("ac"))
             .distinct()
             .join(par, F.col("ac") == par.c, "left")
@@ -1199,8 +1222,8 @@ def boruvka_msf(
                 F.col("ac").alias("c"),
                 F.coalesce("p", F.col("ac")).alias("p"),
             )
-            .localCheckpoint(eager=True)
         )
+        par = hooked
         # pointer-jump to the roots (depth halves per jump). Per jump the
         # plan is par ⋈ par — 2^j joins of the last CHECKPOINTED par, so
         # the lineage stays shallow while the loop runs few jumps; the
@@ -1223,21 +1246,23 @@ def boruvka_msf(
                 f"boruvka_msf: pointer-jump not settled in {max_jumps}"
                 " jumps; raise max_jumps"
             )
-        par = par.localCheckpoint(eager=True)
+        par, _ = materialize(par, supersedes=hooked)
         # relabel every vertex to its component's new root
-        comp = (
+        comp, _ = materialize(
             comp.join(
                 F.broadcast(par.select(F.col("c").alias("rc"), "p")),
                 comp.c == F.col("rc"),
-            )
-            .select("v", F.col("p").alias("c"))
-            .localCheckpoint(eager=True)
+            ).select("v", F.col("p").alias("c")),
+            supersedes=comp,
         )
+        unpersist_checkpoint(par)
     else:
         raise RuntimeError(
             f"boruvka_msf: not contracted within max_rounds={max_rounds};"
             " raise max_rounds"
         )
+    unpersist_checkpoint(comp)
+    unpersist_checkpoint(canon)
     if not forest_parts:
         return (
             spark.createDataFrame([], "src bigint, dst bigint, wu bigint"),
@@ -1248,63 +1273,6 @@ def boruvka_msf(
     for fpart in forest_parts[1:]:
         forest = forest.unionAll(fpart)
     return forest.distinct().orderBy("src", "dst"), rounds, max_jumps_used
-
-
-def hyperball_registers(
-    edges: DataFrame,
-    max_rounds: int = 20,
-) -> tuple[DataFrame, int]:
-    """HyperBall register propagation (Boldi & Vigna, "In-Core
-    Computation of Geometric Centralities with HyperBall", 2013; also
-    HADI, Kang et al. 2011) — per-vertex HLL sketches of the growing
-    reachability ball, the way neighborhood functions and distance
-    distributions are computed at scale. Staged r11 for the SCALE.md r12
-    hyperball_neighborhood registration (the betweenness_sources
-    discipline: operator + model test first, wiring next round).
-
-    State is the SPARSE register table (v, b, reg): the hll_rollup
-    derivation applied to neighbor VERTEX IDS (portable hash60 of the id
-    string; b = h mod 64, reg = rho) — absent buckets contribute nothing
-    to a max fold, so sparsity is exact, and state is bounded by
-    |V| * 64 rows regardless of graph size. Initialization: each vertex
-    holds the one-element sketch of {itself}.
-
-    Per round: reg'(v, b) = max(reg(v, b), max over in-neighbors u of
-    reg(u, b)) — ONE arcs ⋈ state join plus a map-side-combinable max
-    aggregate, register-wise max being exactly the mergeability law
-    hll_merge_rollup proves through the hash gate. Edges are treated as
-    undirected (both arc directions), matching the suite's graph tier.
-
-    Fixed point: when no register changes, reg(v, ·) IS the HLL sketch
-    of v's whole reachable set (max over a union = union of maxes —
-    associativity), which tests/test_graph_algorithms.py pins against a
-    brute-force per-vertex sketch on hand graphs. Convergence is probed
-    with ONE driver scalar per round (sum of all registers: max-folds
-    are monotone non-decreasing, so the sum is stationary iff the state
-    is), and the loop RAISES on bound exhaustion rather than return a
-    truncated ball (the ktruss/betweenness discipline).
-
-    Returns (sparse (v, b, reg) registers at the fixed point, rounds
-    actually propagated = the graph's effective diameter bound). 100 TB:
-    per round one edge-list join against a state table of <= 64 rows per
-    vertex, shuffling (v, b, reg) BIGINT triples only; no vertex ever
-    materializes its ball — that is the entire point of the sketch."""
-    arcs, state = _hyperball_init(edges)
-    prev_sum = state.agg(F.sum("reg")).collect()[0][0] or 0
-    rounds = 0
-    for _ in range(max_rounds):
-        folded = _hyperball_fold(arcs, state)
-        # monotone max-fold: the register sum is stationary iff the
-        # whole state is — one scalar crosses the driver per round
-        cur_sum = folded.agg(F.sum("reg")).collect()[0][0] or 0
-        if cur_sum == prev_sum:
-            return folded, rounds
-        state, prev_sum = folded, cur_sum
-        rounds += 1
-    raise RuntimeError(
-        f"hyperball_registers: not converged within max_rounds="
-        f"{max_rounds}; raise max_rounds (ball still growing)"
-    )
 
 
 def _hyperball_init(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -1320,14 +1288,16 @@ def _hyperball_init(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     verts = arcs.select(F.col("src").alias("v")).distinct()
     h = hash60(F.col("v").cast("string"))
     tail = F.shiftrightunsigned(h, 6)
-    state = verts.select(
-        "v",
-        (h % m).cast("bigint").alias("b"),
-        F.when(tail == 0, rho_max)
-        .otherwise(rho_max - F.length(F.bin(tail)))
-        .cast("bigint")
-        .alias("reg"),
-    ).localCheckpoint(eager=True)
+    state, _ = materialize(
+        verts.select(
+            "v",
+            (h % m).cast("bigint").alias("b"),
+            F.when(tail == 0, rho_max)
+            .otherwise(rho_max - F.length(F.bin(tail)))
+            .cast("bigint")
+            .alias("reg"),
+        )
+    )
     return arcs, state
 
 
@@ -1337,12 +1307,9 @@ def _hyperball_fold(arcs: DataFrame, state: DataFrame) -> DataFrame:
     nbr = arcs.join(state, arcs.dst == state.v).select(
         F.col("src").alias("v"), "b", "reg"
     )
-    return (
-        state.unionAll(nbr)
-        .groupBy("v", "b")
-        .agg(F.max("reg").alias("reg"))
-        .localCheckpoint(eager=True)
-    )
+    return materialize(
+        state.unionAll(nbr).groupBy("v", "b").agg(F.max("reg").alias("reg"))
+    )[0]
 
 
 def hyperball_rounds(edges: DataFrame, n_rounds: int) -> list[DataFrame]:
@@ -1403,10 +1370,15 @@ def jp_coloring(
     instead of silent."""
     from gpu_mapreduce_spark.functions.portable import hash60
 
-    if arcs is None:
-        arcs = edges.select("src", "dst").unionAll(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).localCheckpoint(eager=True)
+    own_arcs = arcs is None
+    if own_arcs:
+        arcs, _ = materialize(
+            edges.select("src", "dst").unionAll(
+                edges.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                )
+            )
+        )
     # strict total order as ONE packed key: priority in the high bits,
     # vertex id in the low 20 (the boruvka packing envelope discipline)
     V_SHIFT = 1 << 20
@@ -1420,18 +1392,20 @@ def jp_coloring(
         hash60(F.concat(F.lit(f"jp{seed}|"), F.col("v").cast("string")))
         % (1 << 40)
     ) * V_SHIFT + F.col("v")
-    uncolored = (
-        arcs.select(F.col("src").alias("v"))
-        .distinct()
-        .select("v", pr.alias("p"))
-        .localCheckpoint(eager=True)
+    # the uncolored count is observed on every uncolored-set checkpoint,
+    # the initial one included, so the loop-top test costs no job
+    uncolored, n_uncolored = materialize(
+        arcs.select(F.col("src").alias("v")).distinct().select("v", pr.alias("p")),
+        F.count(F.lit(1)),
     )
     spark = uncolored.sparkSession
     colored = spark.createDataFrame([], "v bigint, color bigint")
     rounds = 0
-    n_uncolored = None  # None = probe the initial state once; observed after
     for _ in range(max_rounds):
-        if (n_uncolored == 0) or (n_uncolored is None and uncolored.isEmpty()):
+        if n_uncolored == 0:
+            unpersist_checkpoint(uncolored)
+            if own_arcs:
+                unpersist_checkpoint(arcs)
             return colored.orderBy("v"), rounds
         rounds += 1
         # local-max test among UNCOLORED neighbors only: state joins on
@@ -1443,11 +1417,10 @@ def jp_coloring(
             .groupBy(F.col("dst").alias("v"))
             .agg(F.max("up").alias("nmax"))
         )
-        winners = (
+        winners, _ = materialize(
             uncolored.join(nbr_max, "v", "left")
             .filter(F.col("nmax").isNull() | (F.col("p") > F.col("nmax")))
             .select("v")
-            .localCheckpoint(eager=True)
         )
         # min-absent color over each winner's already-colored neighbors:
         # a winner with k colored neighbors needs only candidates 0..k
@@ -1475,17 +1448,15 @@ def jp_coloring(
             .groupBy("v")
             .agg(F.min("c").cast("bigint").alias("color"))
         )
-        colored = colored.unionAll(chosen).localCheckpoint(eager=True)
-        # remaining-uncolored count observed during the checkpoint — the
-        # loop-top emptiness probe then costs no job (fixpoint_observed
-        # discipline)
-        obs = Observation()
-        uncolored = (
-            uncolored.join(winners, "v", "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        colored, _ = materialize(
+            colored.unionAll(chosen), supersedes=colored
         )
-        n_uncolored = obs.get["n"]
+        uncolored, n_uncolored = materialize(
+            uncolored.join(winners, "v", "left_anti"),
+            F.count(F.lit(1)),
+            supersedes=uncolored,
+        )
+        unpersist_checkpoint(winners)
     raise RuntimeError(
         f"jp_coloring: not finished within max_rounds={max_rounds};"
         " raise max_rounds (priority chains serialize around hubs)"
@@ -1547,7 +1518,9 @@ def greedy_matching(
             "greedy_matching packing envelope: needs 0 <= src/dst < 2^20"
             " and 0 <= wu < 2^22 (re-pack for bigger graphs)"
         )
-    live = (
+    # the live-edge count is observed on every live-set checkpoint, the
+    # initial one included, so the loop-top test costs no job
+    live, n_live = materialize(
         wedges.select(
             F.least("src", "dst").alias("src"),
             F.greatest("src", "dst").alias("dst"),
@@ -1565,14 +1538,14 @@ def greedy_matching(
                 + F.col("src") * F.lit(V_SHIFT)
                 + F.col("dst")
             ).alias("pk"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        F.count(F.lit(1)),
     )
-    matched_parts: list[DataFrame] = []
+    matched_parts: list[DataFrame] = []  # read by the result: never freed
     counts: list[int] = []
-    n_live = None  # None = probe the initial state once; observed after
     for rnd in range(1, max_rounds + 1):
-        if (n_live == 0) or (n_live is None and live.isEmpty()):
+        if n_live == 0:
+            unpersist_checkpoint(live)
             spark = wedges.sparkSession
             if not matched_parts:
                 return (
@@ -1599,16 +1572,14 @@ def greedy_matching(
         )
         # the per-round matched count — the ONE driver scalar — is
         # observed during the winners checkpoint itself (no count job)
-        wobs = Observation()
-        winners = (
+        winners, n_won = materialize(
             live.join(vs, live.src == F.col("sv"))
             .join(vd, live.dst == F.col("dv"))
             .filter((F.col("pk") == F.col("svm")) & (F.col("pk") == F.col("dvm")))
-            .select("src", "dst", "wu")
-            .observe(wobs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .select("src", "dst", "wu"),
+            F.count(F.lit(1)),
         )
-        counts.append(int(wobs.get["n"]))
+        counts.append(int(n_won))
         matched_parts.append(
             winners.select(
                 F.lit(rnd).cast("int").alias("round"), "src", "dst", "wu"
@@ -1619,14 +1590,13 @@ def greedy_matching(
             .unionAll(winners.select(F.col("dst").alias("mv")))
             .distinct()
         )
-        lobs = Observation()
-        live = (
-            live.join(mv, live.src == F.col("mv"), "left_anti")
-            .join(mv, live.dst == F.col("mv"), "left_anti")
-            .observe(lobs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        live, n_live = materialize(
+            live.join(mv, live.src == F.col("mv"), "left_anti").join(
+                mv, live.dst == F.col("mv"), "left_anti"
+            ),
+            F.count(F.lit(1)),
+            supersedes=live,
         )
-        n_live = lobs.get["n"]
     raise RuntimeError(
         f"greedy_matching: live edges remain after max_rounds={max_rounds};"
         " raise max_rounds (constant weights serialize priority chains —"

@@ -37,10 +37,10 @@ exactly the skew AQE's shuffle handling absorbs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gpu_mapreduce_spark.plans.iterate import unpersist_checkpoint
+from gpu_mapreduce_spark.plans.iterate import materialize
 
 
 def _descend(n_levels: int, a: float, b: float, c: float, seed: int):
@@ -95,23 +95,14 @@ def rmat_edges(
         generated += need
         src, dst = _descend(n_levels, a, b, c, seed)
         cand = batch.select(src.alias("src"), dst.alias("dst"))
-        prev = acc
-        acc = cand if acc is None else acc.unionAll(cand)
-        # unique count observed during the round's own checkpoint
-        # materialization (r15 — the fixpoint_observed discipline: the
-        # old acc.count() probe was one extra scheduled job per cull
-        # round re-scanning the just-checkpointed edge set), and the
-        # superseded round snapshot is unpersisted once its successor
-        # is materialized
-        obs = Observation()
-        acc = (
-            acc.distinct()
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        # unique count observed during the round's own checkpoint (no
+        # count job); the superseded round snapshot is freed once its
+        # successor exists
+        acc, unique = materialize(
+            (cand if acc is None else acc.unionAll(cand)).distinct(),
+            F.count(F.lit(1)),
+            supersedes=acc,
         )
-        unique = obs.get["n"]
-        if prev is not None:
-            unpersist_checkpoint(prev)
         if unique == target:
             return acc, rounds
     raise RuntimeError(

@@ -1,16 +1,23 @@
-"""Iterative fixpoint driver (SURVEY.md §7 step 5, §4 conclusion (a)).
+"""Iterative fixpoint driver (SURVEY.md §7 step 5, §4 conclusion (a)) and
+the one way loop state is materialized.
 
 Spark has no fixpoint operator; the reference got iteration "for free" from
 mutable KV objects (`kv->append` loops, e.g. oink/sssp.cpp:112-137,
 oink/cc_find.cpp:64-103 `while (!done)`). The Spark-native equivalent is a
-driver-side loop whose per-iteration state is `localCheckpoint`ed:
+driver-side loop whose per-round state goes through `materialize`:
 
-  - localCheckpoint truncates lineage — without it the plan doubles every
-    iteration and Catalyst analysis time alone goes super-linear by ~iter 15.
-    Eager=True also pins the iteration's result so the convergence action and
-    the next step don't recompute it.
-  - Convergence is a driver-side `count` action per iteration — same contract
-    as the reference's per-iteration MPI_Allreduce pair count.
+  - the state is `localCheckpoint`ed eagerly: lineage is truncated (without
+    it the plan doubles every round and Catalyst analysis alone goes
+    super-linear by ~round 15), and the round's result is pinned so the
+    next step does not recompute it;
+  - the round's one driver scalar (changed labels, frontier size, ...) is
+    OBSERVED during that same checkpoint action (CollectMetrics), so
+    convergence costs no extra job — the reference pays one MPI_Allreduce
+    per round for the same scalar;
+  - the superseded snapshot is freed as soon as its successor exists, so a
+    50-round loop holds one snapshot, not 50;
+  - exhausting the round bound raises `RuntimeError`: a truncated state is
+    never returned as if it had converged.
 
 Scale notes (1000 executors / 100 TB): localCheckpoint stores to executor
 block storage (memory then disk) — for TB-scale iteration state prefer
@@ -25,6 +32,7 @@ oink/cc_find.cpp:43-55 — Spark's partial aggregation + AQE subsume it).
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import Column, DataFrame, Observation
 
@@ -52,73 +60,82 @@ def unpersist_checkpoint(df: DataFrame) -> None:
         pass  # best-effort: a leaked block is a perf wart, not an error
 
 
+def materialize(
+    df: DataFrame,
+    metric: Column | None = None,
+    supersedes: DataFrame | None = None,
+) -> tuple[DataFrame, Any]:
+    """Eagerly `localCheckpoint` `df`; returns (snapshot, observed value).
+
+    `metric` is an aggregate Column observed (CollectMetrics, a transparent
+    pass-through node) during the checkpoint action itself, so the scalar
+    costs no job of its own; the value is None without a metric. Once the
+    new snapshot exists, `supersedes` — the snapshot this one replaces — is
+    freed (`unpersist_checkpoint`); pass it only when no DataFrame that can
+    still be reached reads it."""
+    obs = None
+    if metric is not None:
+        obs = Observation()
+        df = df.observe(obs, metric.alias("m"))
+    out = df.localCheckpoint(eager=True)
+    value = obs.get["m"] if obs is not None else None
+    if supersedes is not None:
+        unpersist_checkpoint(supersedes)
+    return out, value
+
+
+def _exhausted(max_iter: int) -> RuntimeError:
+    return RuntimeError(
+        f"fixpoint not reached within max_iter={max_iter}; a truncated state"
+        " is never returned, so raise max_iter"
+    )
+
+
 def fixpoint(
     state: DataFrame,
     step: Callable[[DataFrame], DataFrame],
     converged: Callable[[DataFrame, DataFrame], bool],
     max_iter: int = 50,
 ) -> tuple[DataFrame, int]:
-    """Iterate `state = step(state)` until `converged(prev, cur)` or
-    max_iter. Returns (fixpoint DataFrame — checkpointed, iterations run).
-    Superseded per-round snapshots are unpersisted as soon as the convergence
-    check has consumed them; only the returned fixpoint stays materialized.
-
-    `converged` should be an existence probe (`df.filter(...).isEmpty()`),
-    not a count: isEmpty stops at the first non-empty partition of the
-    already-checkpointed state, so every NON-final round — the common case —
-    pays a near-zero check, while a count scans all partitions every round
-    (the reference pays a full MPI_Allreduce per round instead,
-    oink/cc_find.cpp:64-103)."""
-    cur = state.localCheckpoint(eager=True)
+    """Iterate `state = step(state)` until `converged(prev, cur)`. Returns
+    (fixpoint DataFrame — checkpointed, iterations run); raises RuntimeError
+    when max_iter rounds do not converge. The probe-per-round form, kept as
+    the baseline `fixpoint_observed` is measured against: `converged` is a
+    separately scheduled action (e.g. `cur.filter(...).isEmpty()`) every
+    round."""
+    cur, _ = materialize(state)
     for i in range(1, max_iter + 1):
-        nxt = step(cur).localCheckpoint(eager=True)
+        nxt, _ = materialize(step(cur))
         done = converged(cur, nxt)
         unpersist_checkpoint(cur)
         if done:
             return nxt, i
         cur = nxt
-    return cur, max_iter
+    raise _exhausted(max_iter)
 
 
 def fixpoint_observed(
     state: DataFrame,
     step: Callable[[DataFrame], DataFrame],
     done_metric: Callable[[], Column],
-    done: Callable[[int], bool],
+    done: Callable[[Any], bool],
     max_iter: int = 50,
 ) -> tuple[DataFrame, int]:
-    """`fixpoint` with the convergence probe FUSED into the checkpoint
-    (r14 optimization): `done_metric()` builds an aggregate Column that is
-    observed (`Dataset.observe` / CollectMetrics) while the round's new
-    state materializes under `localCheckpoint(eager=True)` — the eager
-    checkpoint is a Spark action, so the metric is available immediately
-    and convergence costs ZERO extra jobs. The classic loop paid one
-    scheduled probe job per round (isEmpty/count over the just-
-    checkpointed state — cheap per round, but it is a driver-blocking
-    scheduling barrier × rounds, and at 100 TB a count probe re-reads the
-    whole cached state); here the metric rides the materialization pass
-    map-side for free.
+    """Iterate `state = step(state)` until `done(value)`, where `value` is
+    `done_metric()` observed while the round's state materializes
+    (`materialize`: zero probe jobs). Returns (fixpoint DataFrame —
+    checkpointed, rounds run); raises RuntimeError when max_iter rounds do
+    not converge.
 
-    `done_metric` is a THUNK (a fresh Column per round — Observation
-    rejects reuse of a consumed observation, and a fresh alias keeps each
-    round's CollectMetrics node independent); `done(value)` decides
-    convergence from the observed scalar. Rows are untouched:
-    CollectMetrics is a transparent pass-through node, so results are
-    bit-identical to the probe form."""
-    cur = state.localCheckpoint(eager=True)
+    `done_metric` is a THUNK: Observation rejects reuse, so every round
+    needs a fresh Column. Rows are untouched, so results are bit-identical
+    to the probe form (`fixpoint`)."""
+    cur, _ = materialize(state)
     for i in range(1, max_iter + 1):
-        obs = Observation()
-        nxt = (
-            step(cur)
-            .observe(obs, done_metric().alias("m"))
-            .localCheckpoint(eager=True)
-        )
-        val = obs.get["m"]
-        unpersist_checkpoint(cur)
+        cur, val = materialize(step(cur), done_metric(), supersedes=cur)
         if done(val):
-            return nxt, i
-        cur = nxt
-    return cur, max_iter
+            return cur, i
+    raise _exhausted(max_iter)
 
 
 def iterate_n(
@@ -130,13 +147,14 @@ def iterate_n(
     """Run exactly n iterations (no convergence action — for algorithms whose
     semantics are round-bounded, e.g. K-round Bellman-Ford or fixed-iteration
     pagerank, where the round count IS the spec and oracle parity requires it).
+    The state is materialized every `checkpoint_every` rounds and after the
+    last one; un-checkpointed rounds replay from the last snapshot.
     """
-    cur = state.localCheckpoint(eager=True)
+    cur, _ = materialize(state)
     last_ckpt = cur
     for i in range(1, n + 1):
         cur = step(cur)
         if i % checkpoint_every == 0 or i == n:
-            cur = cur.localCheckpoint(eager=True)
-            unpersist_checkpoint(last_ckpt)
+            cur, _ = materialize(cur, supersedes=last_ckpt)
             last_ckpt = cur
     return cur

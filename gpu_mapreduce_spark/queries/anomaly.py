@@ -39,9 +39,10 @@ it. Nothing data-sized shuffles twice.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gpu_mapreduce_spark.plans.iterate import materialize
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources.tables import table
 
@@ -97,19 +98,15 @@ def arrival_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     # the BIGINT-envelope scalar rides the baseline's own checkpoint
-    # (fixpoint_observed discipline: no separate probe job)
-    obs = Observation()
-    mom = (
-        fine.groupBy("hh", "event_type")
-        .agg(
+    # (plans.iterate.materialize: no separate probe job)
+    mom, env = materialize(
+        fine.groupBy("hh", "event_type").agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("cnt").cast("bigint").alias("s1"),
             F.sum(F.col("cnt") * F.col("cnt")).cast("bigint").alias("s2"),
-        )
-        .observe(obs, F.max(F.col("n") * F.col("s2")).alias("env"))
-        .localCheckpoint(eager=True)
+        ),
+        F.max(F.col("n") * F.col("s2")),
     )
-    env = obs.get["env"]
     if env is not None and env >= 1 << 62:
         raise RuntimeError(
             f"arrival_rate_anomaly: n*s2 = {env} breaches the BIGINT"

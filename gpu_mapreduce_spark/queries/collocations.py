@@ -23,11 +23,12 @@ its own). Total-token count N is one collected scalar."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.operators import textstats as ts
 from gpu_mapreduce_spark.queries.textstats import _TOKS, _sql_ngrams
+from gpu_mapreduce_spark.plans.iterate import materialize
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources.tables import table, widen
 
@@ -70,16 +71,12 @@ def collocations_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocab-sized; checkpointed so N and both PMI join sides read the one
     # materialized count table instead of re-tokenizing the corpus (a bare
     # uni.count() here would be a whole extra explode scan for a scalar)
-    # N rides the count table's own checkpoint (r14 observe discipline):
-    # the separate sum job over the checkpointed vocab is gone
-    obs = Observation()
-    ucnt = (
-        uni.groupBy("w")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .observe(obs, F.sum("n").alias("n_total"))
-        .localCheckpoint(eager=True)
+    # N rides the count table's own checkpoint (plans.iterate.materialize):
+    # no separate sum job over the checkpointed vocab
+    ucnt, n_total = materialize(
+        uni.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("n")),
+        F.sum("n"),
     )
-    n_total = obs.get["n_total"]
     bcnt = (
         staged.select(F.explode(ts._ngrams(F.col("toks"), 2)).alias("g"))
         .groupBy("g")

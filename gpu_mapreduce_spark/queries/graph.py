@@ -139,23 +139,21 @@ _TRI_SQL = """
     JOIN edges e3 ON e3.src = e1.src AND e3.dst = e2.dst
 """
 
-_ADJ_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 def _oriented_adj_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-oriented out-adjacency of the canonical edge fixture,
-    materialized once per (session, sf_dir) — the CSR-like artifact all
-    triangle queries probe (see fixtures.edges_materialized for the
-    rationale; at cluster scale this is a persisted table derived once,
-    alongside the edge list itself)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    adj = _ADJ_CACHE.get(key)
-    if adj is None:
-        adj = graph.oriented_adj(
+    materialized once per (session, sf_dir) through fixtures.derived — the
+    CSR-like artifact all triangle queries probe (see
+    fixtures.edges_materialized for the rationale; at cluster scale this is
+    a persisted table derived once, alongside the edge list itself)."""
+    return fixtures.derived(
+        spark,
+        sf_dir,
+        "oriented_adj",
+        lambda: graph.oriented_adj(
             fixtures.edges_materialized(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-        _ADJ_CACHE[key] = adj
-    return adj
+        ).localCheckpoint(eager=True),
+    )
 
 
 @register(

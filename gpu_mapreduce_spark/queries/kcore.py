@@ -59,8 +59,8 @@ def _kcore_oracle(k: int = _K, stages: int = _STAGES) -> str:
 def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vertices of the {_K}-core of the edges fixture with their degree
     inside the core-induced subgraph (operators/graph_iter.kcore — the
-    synchronous-peel fixpoint; see its docstring for the per-round plan
-    and the beyond-broadcast-|V| path)."""
+    synchronous-peel fixpoint; see its docstring for the per-round plan:
+    the survivor set is broadcast against arcs that never move)."""
     from gpu_mapreduce_spark.queries.graph_iter import _arcs
 
     core, _rounds = graph_iter.kcore(

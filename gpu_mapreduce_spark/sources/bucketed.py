@@ -8,7 +8,8 @@ distribution requirement is already satisfied and so is any downstream
 groupBy whose keys include the bucket column (subset rule). On a cluster
 this layout is written once at ingest; here the first query per (session,
 table) pays a one-time `bucketBy().sortBy().saveAsTable()` into a temp
-warehouse dir and every later use is a plain bucketed scan.
+dir (fixtures.derived_dir: removed at exit) and every later use is a plain
+bucketed scan.
 
 The reference has no analog — its `aggregate` re-shuffles every pipeline
 (src/mapreduce.cpp:385-563); pre-bucketed storage is exactly the shuffle it
@@ -19,15 +20,12 @@ tests/test_bucketed.py asserts the no-exchange property mechanically.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
+from gpu_mapreduce_spark.sources.fixtures import derived_dir
 from gpu_mapreduce_spark.sources.tables import table
 
 NBUCKETS = 16
-
-_REGISTERED: set[tuple[str, str, str, str]] = set()
 
 
 def bucketed_table(
@@ -43,17 +41,16 @@ def bucketed_table(
     planner."""
     sf_tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/").rsplit("/", 1)[-1])
     tbl = f"bkt_{sf_tag}_{name}_{bucket_col}_{nbuckets}"
-    key = (spark.sparkContext.applicationId, sf_dir, name, tbl)
-    if key not in _REGISTERED:
-        path = tempfile.mkdtemp(prefix=f"{tbl}_")
-        (
-            table(spark, sf_dir, name)
-            .write.format("parquet")
-            .bucketBy(nbuckets, bucket_col)
-            .sortBy(bucket_col)
-            .mode("overwrite")
-            .option("path", f"{path}/{tbl}")
-            .saveAsTable(tbl)
-        )
-        _REGISTERED.add(key)
+    derived_dir(
+        spark,
+        sf_dir,
+        tbl,
+        lambda path: table(spark, sf_dir, name)
+        .write.format("parquet")
+        .bucketBy(nbuckets, bucket_col)
+        .sortBy(bucket_col)
+        .mode("overwrite")
+        .option("path", f"{path}/{tbl}")
+        .saveAsTable(tbl),
+    )
     return spark.table(tbl)

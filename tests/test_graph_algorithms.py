@@ -298,52 +298,6 @@ def test_boruvka_msf_decodes_top_of_envelope_exactly(spark):
     assert rounds == 1 and jumps == 0
 
 
-def test_hyperball_fixed_point_is_reachable_set_sketch(spark):
-    """hyperball_registers model check (staged r11 for the r12
-    registration): at the fixed point each vertex's sparse registers must
-    equal the HLL sketch of its ENTIRE reachable set, computed here by
-    brute force (max-fold over the component's per-vertex (bucket, rho)
-    pairs) — the register algebra's union law. Two components pin
-    no-cross-contamination; the path component pins multi-round
-    propagation (diameter 3 -> 3 effective rounds); the bound-exhaustion
-    raise is the ktruss/betweenness loud-failure discipline."""
-    import hashlib
-
-    import pytest as _pytest
-
-    from gpu_mapreduce_spark.operators import graph_iter
-
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (10, 11)], "src bigint, dst bigint"
-    )
-    state, rounds = graph_iter.hyperball_registers(edges)
-    # path 0-1-2-3 has diameter 3; vertex 0's ball stops growing after
-    # round 3, the bridge pair after round 1 — global fixed point at 3
-    assert rounds == 3
-
-    def sketch(vs):
-        regs = {}
-        for v in vs:
-            h = int(hashlib.md5(str(v).encode()).hexdigest()[:15], 16)
-            b, tail = h % 64, h >> 6
-            # F.bin(x) prints bit_length(x) digits: rho = 55 - bitlength
-            rho = 55 if tail == 0 else 55 - tail.bit_length()
-            regs[b] = max(regs.get(b, 0), rho)
-        return regs
-
-    comp = {0: [0, 1, 2, 3], 1: [0, 1, 2, 3], 2: [0, 1, 2, 3],
-            3: [0, 1, 2, 3], 10: [10, 11], 11: [10, 11]}
-    got: dict[int, dict[int, int]] = {}
-    for r in state.collect():
-        got.setdefault(r.v, {})[r.b] = r.reg
-    assert set(got) == set(comp)
-    for v, vs in comp.items():
-        assert got[v] == sketch(vs), f"vertex {v} registers diverge"
-
-    with _pytest.raises(RuntimeError, match="not converged"):
-        graph_iter.hyperball_registers(edges, max_rounds=2)
-
-
 def test_hyperball_rmat_round3_registers_equal_exact_ball_sketches(spark):
     """hyperball_rmat's estimator-honesty check, stronger than a recall
     tolerance: on the canonical R-MAT graph, the round-3 registers of the
@@ -582,3 +536,116 @@ def test_forest_fire_argument_guards(spark):
         graph_iter.forest_fire_sample(edges, seeds=[], rounds=2)
     with _pytest.raises(ValueError, match="absent from the graph"):
         graph_iter.forest_fire_sample(edges, seeds=[0, 42], rounds=2)
+
+
+def test_fixpoint_exhaustion_raises(spark):
+    """One exhaustion policy: a fixpoint loop that runs out of rounds
+    raises instead of returning its truncated state as if it had
+    converged. On the 8-edge path 0-1-...-8, min-label propagation needs 8
+    rounds and the 2-core peel 4, so max_iter=2 truncates both."""
+    import pytest as _pytest
+
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)], "src bigint, dst bigint"
+    )
+    with _pytest.raises(RuntimeError, match="max_iter=2"):
+        graph_iter.cc_find(path, max_iter=2)
+    with _pytest.raises(RuntimeError, match="max_iter=2"):
+        graph_iter.kcore(path, k=2, max_iter=2)
+    # the same calls with enough rounds converge
+    cc, _ = graph_iter.cc_find(path, max_iter=20)
+    assert {r.zone for r in cc.collect()} == {0}
+    core, _ = graph_iter.kcore(path, k=2, max_iter=20)
+    assert core.collect() == []
+
+
+# two triangles joined by a bridge, a pendant path and a 4-cycle: 14 edges
+_HAND_EDGES = [
+    (0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (4, 5), (3, 5),
+    (5, 6), (6, 7), (7, 8), (8, 9), (9, 10), (10, 7), (6, 10),
+]
+
+
+def _hand_graph(spark):
+    edges = spark.createDataFrame(_HAND_EDGES, "src bigint, dst bigint")
+    wedges = edges.select(
+        "src",
+        "dst",
+        ((F.col("src") * 7 + F.col("dst") * 3) % 11 + 1)
+        .cast("bigint")
+        .alias("wu"),
+    )
+    return edges, wedges
+
+
+def _checkpoints_read(df) -> set[int]:
+    """Ids of the checkpointed RDDs `df` still reads: the LogicalRDD
+    leaves of its analyzed plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
+def test_loop_snapshots_are_freed(spark):
+    """Every hand-rolled loop frees each snapshot it made that its result
+    does not read (superseded round states, its own arc table, the final
+    empty frontier): after one call plus collect(), the persisted-RDD set
+    grows by exactly the checkpoints the returned DataFrame reads."""
+    edges, wedges = _hand_graph(spark)
+    jsc = spark.sparkContext._jsc
+    calls = {
+        "jp_coloring": lambda: graph_iter.jp_coloring(edges)[0],
+        "greedy_matching": lambda: graph_iter.greedy_matching(wedges)[0],
+        # t_num == t_den: every candidate arc survives, so the fire spreads
+        "forest_fire_sample": lambda: graph_iter.forest_fire_sample(
+            edges, [0], rounds=3, t_num=1, t_den=1
+        ),
+        "betweenness_sources": lambda: graph_iter.betweenness_sources(
+            edges, [0, 9]
+        )[0],
+        "boruvka_msf": lambda: graph_iter.boruvka_msf(wedges)[0],
+    }
+    for name, call in calls.items():
+        before = set(jsc.getPersistentRDDs().keys())
+        out = call()
+        assert out.collect(), name
+        grown = set(jsc.getPersistentRDDs().keys()) - before
+        assert grown == _checkpoints_read(out), name
+
+
+def test_jp_and_greedy_initial_size_is_observed(spark):
+    """jp_coloring and greedy_matching read their initial state size from
+    the count observed on its checkpoint, not from a separate isEmpty()
+    probe job. The actions each call runs itself are pinned by name from
+    its job group: the checkpoints plus ONE isEmpty (the packing-envelope
+    check); the probe form ran two. The broadcast and adaptive stage jobs
+    the planner submits from its own threads vary run to run, so they are
+    not counted."""
+    from collections import Counter
+
+    edges, wedges = _hand_graph(spark)
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def actions(group, call):
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        names = (
+            store.job(j).name().split(" at ")[0]
+            for j in sc.statusTracker().getJobIdsForGroup(group)
+        )
+        return Counter(n for n in names if n in ("isEmpty", "localCheckpoint"))
+
+    assert actions("jp_actions", lambda: graph_iter.jp_coloring(edges)) == {
+        "localCheckpoint": 14,
+        "isEmpty": 1,
+    }
+    assert actions(
+        "gm_actions", lambda: graph_iter.greedy_matching(wedges)
+    ) == {"localCheckpoint": 7, "isEmpty": 1}

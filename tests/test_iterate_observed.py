@@ -2,7 +2,8 @@
 
 - plans/iterate.fixpoint_observed — convergence metric observed during the
   round's own eager localCheckpoint (zero probe jobs) must reproduce the
-  classic probe-driven fixpoint exactly (same fixpoint, same round count).
+  classic probe-driven fixpoint exactly (same fixpoint, same round count);
+  Observation is built nowhere else in the library but nprobe_curve.
 - operators/similarity.recall_report — the pooled row derived from the
   MATERIALIZED per-query table must equal the naive
   per.unionByName(per.agg(...)) form row-for-row.
@@ -86,6 +87,23 @@ def test_fixpoint_observed_rows_pass_through_unchanged(spark):
     )
     assert rounds == 1
     assert sorted(r.v for r in fix.collect()) == [0, 3, 6, 9, 12, 15, 18]
+
+
+def test_observation_is_constructed_only_in_plans_iterate():
+    """Loop state is materialized one way: plans.iterate.materialize is the
+    only place an Observation is built, except queries/nprobe_curve.py,
+    which observes a candidate stream that is never checkpointed."""
+    from pathlib import Path
+
+    import gpu_mapreduce_spark
+
+    root = Path(gpu_mapreduce_spark.__file__).parent
+    users = sorted(
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if "Observation(" in p.read_text()
+    )
+    assert users == ["plans/iterate.py", "queries/nprobe_curve.py"]
 
 
 def test_recall_report_equals_naive_union_form(spark):

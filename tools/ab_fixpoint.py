@@ -24,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gpu_mapreduce_spark.operators import graph_iter
-from gpu_mapreduce_spark.plans.iterate import unpersist_checkpoint
+from gpu_mapreduce_spark.plans.iterate import fixpoint
 from gpu_mapreduce_spark.registry import load_all
 from gpu_mapreduce_spark.session import get_spark
 
@@ -38,18 +38,13 @@ def _pred_of(col) -> str:
 
 def fixpoint_classic(state, step, done_metric, done, max_iter=50):
     """The r13 loop: eager checkpoint, then a separately scheduled
-    existence-probe job per round (plans/iterate.fixpoint semantics with
-    the metric's predicate as the probe)."""
+    existence-probe job per round — plans/iterate.fixpoint with the
+    metric's predicate as the probe, so it raises on max_iter exhaustion
+    exactly like fixpoint_observed."""
     pred = _pred_of(done_metric())
-    cur = state.localCheckpoint(eager=True)
-    for i in range(1, max_iter + 1):
-        nxt = step(cur).localCheckpoint(eager=True)
-        is_done = nxt.filter(pred).isEmpty()
-        unpersist_checkpoint(cur)
-        if is_done:
-            return nxt, i
-        cur = nxt
-    return cur, max_iter
+    return fixpoint(
+        state, step, lambda _prev, cur: cur.filter(pred).isEmpty(), max_iter
+    )
 
 
 def main() -> None:
