@@ -28,8 +28,9 @@ measured 2-5 s/round at sf0.1 vs ~0.5 s with the state broadcast. A
 bucketed-by-src, shuffle-hash variant for |V| beyond broadcast range
 existed and was removed unused; git history holds it. min/sum are
 algebraic → map-side combine bounds hot vertices; the reference needed
-hand-rolled zone splitting for exactly this (oink/cc_find.cpp:43-55). AQE
-skew-join covers the rest.
+hand-rolled zone splitting for exactly this (oink/cc_find.cpp:43-55). The
+arc table keeps its dst layout through every checkpoint, so the
+round-ending groupBy(dst) needs no exchange (`_ckpt_by_dst`).
 
 Loop state: every snapshot here goes through plans.iterate.materialize —
 eager checkpoint, the round's one driver scalar observed in the same
@@ -41,7 +42,9 @@ raises RuntimeError instead of returning a truncated state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.operators.graph import bidirect
@@ -60,10 +63,12 @@ def _ckpt_by_dst(df: DataFrame) -> DataFrame:
     state-join-arcs output. The broadcast join preserves the arc table's
     layout, so with arcs already partitioned by dst each map partition holds
     complete key groups and the partial aggregation collapses to its final
-    ~|V| rows before the exchange — the shuffle ships |V| rows instead of
-    partitions x |V| partial rows. (Catalyst can't *know* this layout —
-    localCheckpoint erases outputPartitioning, so the exchange stays in the
-    plan — but it ships almost nothing. Measured: pagerank 8->5.4s at sf0.1.)
+    ~|V| rows. Catalyst knows this layout: `materialize` checkpoints with
+    AQE off, so the snapshot's LogicalRDD keeps hashpartitioning(dst, P)
+    and each round's groupBy(dst) runs in the arc scan's own stage, with no
+    exchange at all. (An adaptive plan reports UnknownPartitioning, so a
+    checkpoint taken with AQE on erases the layout and every round pays a
+    hash exchange — whether AQE is on or off while the round runs.)
     On a cluster this is 'bucket the arc table by dst at rest'."""
     sc = df.sparkSession.sparkContext
     return materialize(df.repartition(sc.defaultParallelism, "dst"))[0]
@@ -400,6 +405,33 @@ def sssp_multi(
 PR_SCALE = 10**12  # pagerank fixed-point: 1.0 rank unit == 10^12
 
 
+def _rank_round(
+    arcs_deg: DataFrame, teleport: Column, alpha_num: int, alpha_den: int
+) -> Callable[[DataFrame], DataFrame]:
+    """One synchronous rank round over the dst-partitioned arcs_deg table,
+    shared by pagerank and personalized_pagerank: ranks broadcast against
+    the arcs, one aggregate grouped on `dst AS v` computing
+    `CAST(teleport + sum((alpha_num * r) div (alpha_den * outdeg)) AS
+    BIGINT)`. `teleport` may read `dst` (the grouping key). The graph is
+    bidirected, so every vertex has >=1 in-arc and the aggregate already
+    covers the whole vertex set — no join back onto the old rank table.
+    The Columns are built once; each round adds one join and one
+    aggregate."""
+    on = F.col("src") == F.col("v")
+    new_r = (
+        teleport
+        + F.sum(F.expr(f"({alpha_num} * r) div ({alpha_den} * outdeg)"))
+    ).cast("bigint").alias("r")
+    by_dst = F.col("dst").alias("v")
+
+    def step(ranks: DataFrame) -> DataFrame:
+        return (
+            arcs_deg.join(F.broadcast(ranks), on).groupBy(by_dst).agg(new_r)
+        )
+
+    return step
+
+
 def pagerank(
     edges: DataFrame,
     num_iter: int = 10,
@@ -432,25 +464,7 @@ def pagerank(
         .distinct()
         .select("v", F.lit(PR_SCALE // n).cast("bigint").alias("r"))
     )
-
-    def step(ranks: DataFrame) -> DataFrame:
-        # the graph is bidirected, so every vertex has >=1 in-arc and the
-        # contribution aggregate already covers the whole vertex set — new
-        # ranks come straight off it, no join back onto the old rank table
-        return (
-            arcs_deg.join(F.broadcast(ranks), arcs_deg.src == ranks.v)
-            .select(
-                F.col("dst").alias("cv"),
-                F.expr(f"({alpha_num} * r) div ({alpha_den} * outdeg)").alias("c"),
-            )
-            .groupBy("cv")
-            .agg(F.sum("c").alias("csum"))
-            .select(
-                F.col("cv").alias("v"),
-                (F.lit(teleport) + F.col("csum")).cast("bigint").alias("r"),
-            )
-        )
-
+    step = _rank_round(arcs_deg, F.lit(teleport), alpha_num, alpha_den)
     # checkpoint every 3rd round: un-truncated lineage is one broadcast-join
     # + agg per round — cheap to replay, and fewer materializations wins
     # (measured best cadence at sf0.1: ce3 4.3s vs ce1 5.8s vs ce2 5.0s)
@@ -634,29 +648,12 @@ def personalized_pagerank(
         )
     )
 
-    def step(ranks: DataFrame) -> DataFrame:
-        return (
-            arcs_deg.join(F.broadcast(ranks), arcs_deg.src == ranks.v)
-            .select(
-                F.col("dst").alias("cv"),
-                F.expr(f"({alpha_num} * r) div ({alpha_den} * outdeg)").alias(
-                    "c"
-                ),
-            )
-            .groupBy("cv")
-            .agg(F.sum("c").alias("csum"))
-            .select(
-                F.col("cv").alias("v"),
-                (
-                    F.when(F.col("cv").isin(sources), F.lit(teleport))
-                    .otherwise(F.lit(0))
-                    + F.col("csum")
-                )
-                .cast("bigint")
-                .alias("r"),
-            )
-        )
-
+    step = _rank_round(
+        arcs_deg,
+        F.when(F.col("dst").isin(sources), F.lit(teleport)).otherwise(F.lit(0)),
+        alpha_num,
+        alpha_den,
+    )
     out = iterate_n(ranks0, step, num_iter, checkpoint_every=3)
     if arcs_deg_n is None:
         unpersist_checkpoint(arcs_deg)

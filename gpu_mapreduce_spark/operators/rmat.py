@@ -32,7 +32,7 @@ most `target` rows, and the loop state is localCheckpointed so round R
 doesn't replay rounds 1..R-1. Skewed (a ≫ d) parameters produce the
 power-law degree distribution the reference used for its scale experiments —
 and they concentrate duplicate candidates in the hot corner, which is
-exactly the skew AQE's shuffle handling absorbs.
+exactly the skew the distinct's map-side combine absorbs.
 """
 
 from __future__ import annotations

@@ -16,17 +16,27 @@ driver-side loop whose per-round state goes through `materialize`:
     per round for the same scalar;
   - the superseded snapshot is freed as soon as its successor exists, so a
     50-round loop holds one snapshot, not 50;
+  - the checkpoint action is planned with AQE off (a switch scoped to that
+    one action; the caller's setting is restored on return and on error),
+    so the snapshot keeps its hash layout: an arc table partitioned by dst
+    stays hashpartitioning(dst, P), and a round that joins broadcast state
+    against it and groups by dst runs with no exchange — the arcs stay on
+    their partition between rounds the way MR-MPI's KV pages stay on their
+    owning process. AQE stays on for everything else in the session;
   - exhausting the round bound raises `RuntimeError`: a truncated state is
-    never returned as if it had converged.
+    never returned as if it had converged;
+  - `iterate_n` does not checkpoint its initial state on its own: the
+    first chunk's action computes it.
 
 Scale notes (1000 executors / 100 TB): localCheckpoint stores to executor
 block storage (memory then disk) — for TB-scale iteration state prefer
 `reliable=True`-style checkpointing to a cluster FS (spark.checkpoint.dir) at
 a less frequent cadence; the loop structure is unchanged. The per-iteration
-work here is one key-partitioned join + one partially-aggregated groupBy, so
-each round is a single shuffle of the frontier, and map-side combine bounds
-hot keys (the reference needed hand-rolled zone splitting for this,
-oink/cc_find.cpp:43-55 — Spark's partial aggregation + AQE subsume it).
+work here is one join of the broadcast state against arcs partitioned by
+the grouping key + one groupBy that needs no exchange, and map-side
+combine bounds hot keys (the reference needed hand-rolled zone splitting
+for this, oink/cc_find.cpp:43-55 — Spark's partial aggregation subsumes
+it).
 """
 
 from __future__ import annotations
@@ -35,6 +45,8 @@ from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, Observation
+
+_AQE = "spark.sql.adaptive.enabled"
 
 
 def unpersist_checkpoint(df: DataFrame) -> None:
@@ -72,12 +84,26 @@ def materialize(
     costs no job of its own; the value is None without a metric. Once the
     new snapshot exists, `supersedes` — the snapshot this one replaces — is
     freed (`unpersist_checkpoint`); pass it only when no DataFrame that can
-    still be reached reads it."""
+    still be reached reads it.
+
+    The checkpoint action is planned with AQE off, so the snapshot keeps
+    its hash layout: an adaptive plan reports UnknownPartitioning, and its
+    LogicalRDD would make every later round re-exchange what is already
+    partitioned. `spark.sql.adaptive.enabled` is a session-wide setting;
+    it is switched off for this one action only and the caller's value is
+    restored on return and on error. No library path checkpoints from two
+    threads at once, so no concurrent action sees the switch."""
     obs = None
     if metric is not None:
         obs = Observation()
         df = df.observe(obs, metric.alias("m"))
-    out = df.localCheckpoint(eager=True)
+    conf = df.sparkSession.conf
+    aqe = conf.get(_AQE)
+    conf.set(_AQE, "false")
+    try:
+        out = df.localCheckpoint(eager=True)
+    finally:
+        conf.set(_AQE, aqe)
     value = obs.get["m"] if obs is not None else None
     if supersedes is not None:
         unpersist_checkpoint(supersedes)
@@ -148,10 +174,15 @@ def iterate_n(
     semantics are round-bounded, e.g. K-round Bellman-Ford or fixed-iteration
     pagerank, where the round count IS the spec and oracle parity requires it).
     The state is materialized every `checkpoint_every` rounds and after the
-    last one; un-checkpointed rounds replay from the last snapshot.
+    last one; un-checkpointed rounds replay from the last snapshot. The
+    initial state is not checkpointed on its own: the first chunk's action
+    computes it, once as long as `step` reads its input once. With n == 0
+    the initial state itself is checkpointed and returned.
     """
-    cur, _ = materialize(state)
-    last_ckpt = cur
+    if n == 0:
+        return materialize(state)[0]
+    cur = state
+    last_ckpt = None
     for i in range(1, n + 1):
         cur = step(cur)
         if i % checkpoint_every == 0 or i == n:

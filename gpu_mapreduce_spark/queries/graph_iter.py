@@ -133,9 +133,9 @@ def cc_find_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference needed hand-rolled zone splitting for
     (oink/cc_find.cpp:43-55, zones > nthresh split across procs with hi-bit
     proc tags); here the same skew is absorbed by partial aggregation
-    (map-side combine on the min-label groupBy — the hub's updates collapse
-    to one row per partition before the shuffle) plus AQE skew handling,
-    with no operator-level special case. Output is the component-size
+    (the min-label groupBy runs over arcs already partitioned by dst, so
+    the hub's updates collapse to one row in its own partition with no
+    shuffle at all), with no operator-level special case. Output is the component-size
     histogram, so the driver check proves the giant component's exact
     size."""
     e = fixtures.derived(

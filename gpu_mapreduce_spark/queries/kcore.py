@@ -64,7 +64,9 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gpu_mapreduce_spark.queries.graph_iter import _arcs
 
     core, _rounds = graph_iter.kcore(
-        fixtures.edges(spark, sf_dir), k=_K, arcs=_arcs(spark, sf_dir)
+        fixtures.edges_materialized(spark, sf_dir),
+        k=_K,
+        arcs=_arcs(spark, sf_dir),
     )
     # the oracle replays exactly _STAGES peel rounds; peeling is idempotent
     # AT the fixpoint, so an unroll shortfall would surface as a silent

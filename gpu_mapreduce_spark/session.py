@@ -8,7 +8,9 @@ Scale notes (the configs below are chosen for a 1000-executor / 100 TB
 deployment, then overridden down for local[N] testing):
   - AQE on: runtime partition coalescing + skew-join splitting replaces the
     reference's hand-rolled flow control (src/mapreduce.cpp:480-540) and zone
-    splitting (oink/cc_find.cpp:43-55).
+    splitting (oink/cc_find.cpp:43-55). The one exception is the loop-state
+    checkpoint (plans.iterate.materialize), planned with AQE off so the
+    snapshot keeps its hash layout and later rounds need no exchange.
   - shuffle.partitions is a *default* only; AQE coalesces post-shuffle, and
     heavy operators repartition explicitly by key where it matters.
   - Arrow enabled: every Python-side operator uses pandas UDFs / mapInPandas,

@@ -4,6 +4,8 @@ its downstream cc is verified against a pure-Python union-find)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.operators import graph, graph_iter, rmat
@@ -624,23 +626,10 @@ def test_jp_and_greedy_initial_size_is_observed(spark):
     check); the probe form ran two. The broadcast and adaptive stage jobs
     the planner submits from its own threads vary run to run, so they are
     not counted."""
-    from collections import Counter
-
     edges, wedges = _hand_graph(spark)
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
 
     def actions(group, call):
-        sc.setJobGroup(group, group)
-        try:
-            call()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        names = (
-            store.job(j).name().split(" at ")[0]
-            for j in sc.statusTracker().getJobIdsForGroup(group)
-        )
-        return Counter(n for n in names if n in ("isEmpty", "localCheckpoint"))
+        return _named_actions(spark, group, call, ("isEmpty", "localCheckpoint"))
 
     assert actions("jp_actions", lambda: graph_iter.jp_coloring(edges)) == {
         "localCheckpoint": 14,
@@ -649,3 +638,83 @@ def test_jp_and_greedy_initial_size_is_observed(spark):
     assert actions(
         "gm_actions", lambda: graph_iter.greedy_matching(wedges)
     ) == {"localCheckpoint": 7, "isEmpty": 1}
+
+
+def _named_actions(spark, group, call, names=None) -> Counter:
+    """Names of the jobs `call()` runs under job group `group` ("isEmpty",
+    "localCheckpoint", "parquet", ...), restricted to `names` if given."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = (
+        store.job(j).name().split(" at ")[0]
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+    )
+    return Counter(n for n in got if names is None or n in names)
+
+
+def _hash_exchanges(df) -> int:
+    df.collect()  # the adaptive plan is final once it has run
+    return df._jdf.queryExecution().executedPlan().toString().count(
+        "Exchange hashpartitioning"
+    )
+
+
+def test_pagerank_and_kcore_rounds_run_without_exchange(spark, monkeypatch):
+    """The prepared arc tables keep hashpartitioning(dst) through their
+    checkpoint, so a round's groupBy(dst) needs no shuffle: one pagerank
+    round over prepare_arcs_deg and one kcore round over prepare_arcs have
+    no hash Exchange in their executed plans while the session runs AQE.
+    The operators' loop drivers are swapped for one that checkpoints the
+    initial state and returns a single un-checkpointed round."""
+    from gpu_mapreduce_spark.plans.iterate import materialize
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    edges = fixtures.edges_materialized(spark, SF_DIR)
+
+    def one_round(state, step, *_args, **_kw):
+        return step(materialize(state)[0])
+
+    monkeypatch.setattr(graph_iter, "iterate_n", one_round)
+    monkeypatch.setattr(
+        graph_iter, "fixpoint_observed", lambda *a, **k: (one_round(*a), 1)
+    )
+    arcs_deg_n = graph_iter.prepare_arcs_deg(edges)
+    ranks = graph_iter.pagerank(edges, num_iter=1, arcs_deg_n=arcs_deg_n)
+    assert _hash_exchanges(ranks) == 0
+    arcs = graph_iter.prepare_arcs(edges)
+    core, _ = graph_iter.kcore(edges, k=3, arcs=arcs)
+    assert _hash_exchanges(core) == 0
+
+
+def test_kcore_query_scans_no_parquet_once_arcs_are_warm(spark):
+    """The kcore query reads only the memoized arc table: once the memo is
+    warm, a call (construction and collect) runs no parquet job."""
+    from gpu_mapreduce_spark.registry import load_all
+
+    fn = load_all()["kcore"].fn
+    fn(spark, SF_DIR).collect()  # warms the edges and arcs memos
+    got = _named_actions(
+        spark, "kcore_warm", lambda: fn(spark, SF_DIR).collect()
+    )
+    assert "parquet" not in got, got
+
+
+def test_pagerank_checkpoints_every_third_round_only(spark):
+    """Ten pagerank rounds at checkpoint cadence 3 run exactly four named
+    checkpoint actions (after rounds 3, 6, 9 and 10): the initial rank
+    table is computed by the first chunk's action, not checkpointed on its
+    own."""
+    edges = fixtures.edges_materialized(spark, SF_DIR)
+    arcs_deg_n = graph_iter.prepare_arcs_deg(edges)
+    got = _named_actions(
+        spark,
+        "pagerank_ckpts",
+        lambda: graph_iter.pagerank(edges, num_iter=10, arcs_deg_n=arcs_deg_n),
+        ("localCheckpoint",),
+    )
+    assert got == {"localCheckpoint": 4}

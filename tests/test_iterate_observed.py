@@ -4,6 +4,8 @@
   round's own eager localCheckpoint (zero probe jobs) must reproduce the
   classic probe-driven fixpoint exactly (same fixpoint, same round count);
   Observation is built nowhere else in the library but nprobe_curve.
+- plans/iterate.materialize — the checkpoint keeps the frame's hash layout
+  and leaves the caller's AQE setting as it found it.
 - operators/similarity.recall_report — the pooled row derived from the
   MATERIALIZED per-query table must equal the naive
   per.unionByName(per.agg(...)) form row-for-row.
@@ -18,7 +20,11 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from gpu_mapreduce_spark.plans.iterate import fixpoint, fixpoint_observed
+from gpu_mapreduce_spark.plans.iterate import (
+    fixpoint,
+    fixpoint_observed,
+    materialize,
+)
 
 
 @pytest.fixture(scope="module")
@@ -104,6 +110,36 @@ def test_observation_is_constructed_only_in_plans_iterate():
         if "Observation(" in p.read_text()
     )
     assert users == ["plans/iterate.py", "queries/nprobe_curve.py"]
+
+
+@pytest.mark.parametrize("prior", ["true", "false"])
+def test_materialize_restores_the_callers_aqe_setting(spark, prior):
+    """materialize plans its checkpoint with AQE off and hands the caller's
+    value back, on return and when the action raises."""
+    key = "spark.sql.adaptive.enabled"
+    spark.conf.set(key, prior)
+    try:
+        materialize(spark.range(5))
+        assert spark.conf.get(key) == prior
+        boom = spark.range(3).select(F.raise_error(F.lit("boom")).alias("x"))
+        with pytest.raises(Exception, match="boom"):
+            materialize(boom)
+        assert spark.conf.get(key) == prior
+    finally:
+        spark.conf.set(key, "true")
+
+
+def test_materialize_snapshot_keeps_hash_layout(spark):
+    """A hash-repartitioned frame checkpointed through materialize keeps its
+    layout in the snapshot's LogicalRDD, with AQE on in the session."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    df = spark.range(100).select(
+        F.col("id").alias("src"), (F.col("id") % 7).alias("dst")
+    )
+    snap, _ = materialize(df.repartition(3, "dst"))
+    plan = snap._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LogicalRDD"
+    assert plan.outputPartitioning().toString().startswith("hashpartitioning(dst")
 
 
 def test_recall_report_equals_naive_union_form(spark):
