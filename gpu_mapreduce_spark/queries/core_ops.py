@@ -488,14 +488,20 @@ def scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over all pairs into a formatted sink. Ours writes the pairs to a
     headered CSV sink (the distributed form of the reference's per-pair
     print callback), then proves nothing was lost or reformatted by reading
-    the dump back and re-aggregating it."""
+    the dump back and re-aggregating it. The read-back declares the
+    writer's schema (no header job, no inference pass) and runs FAILFAST,
+    so a malformed field raises instead of becoming null."""
     from gpu_mapreduce_spark.plans.scratch import sink_roundtrip
 
     kv = fixtures.kvpairs(spark, sf_dir)
 
     def build(path: str) -> DataFrame:
         core.scan_sink(kv.coalesce(4), path, fmt="csv", header=True)
-        back = spark.read.csv(path, header=True, inferSchema=True)
+        back = (
+            spark.read.schema(kv.schema)
+            .option("mode", "FAILFAST")
+            .csv(path, header=True)
+        )
         return back.groupBy("k").agg(F.sum("v").cast("bigint").alias("sum"))
 
     return sink_roundtrip("scan_sink_", build)

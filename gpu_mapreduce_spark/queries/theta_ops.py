@@ -14,8 +14,9 @@ source's shingle stream (sources A = even doc_ids, B = doc_ids % 3 == 0
 — genuinely overlapping shingle sets). Plan (r15, kmv_sketch_pair): ONE
 tagged pass — per-doc distinct shingles (dedup.shingle_set) → hash →
 source tags exploded map-side → one k-min-distinct partial per
-(scan-partition, tag), folded driver-side by k-min union — no full
-sort, no window, no global distinct materialization. The
+(scan-partition, tag), folded per tag by a k-min union aggregate on the
+executors (the driver collects 2 rows) — no full sort, no window, no
+global distinct materialization. The
 UNION sketch is computed FROM THE SKETCHES (k smallest of S_A ∪ S_B),
 while the oracle builds it from the raw distinct union — equality
 through the hash gate IS the KMV mergeability law (the k smallest of a
@@ -91,14 +92,15 @@ def kmv_sketch_pair(docs: DataFrame, k: int = _K) -> tuple[list[int], list[int]]
     same per-partition distinct-hash state the classic plan's partial
     DISTINCT aggregate held — the exchange carries each within-partition
     distinct hash once, exactly the bytes the two classic distinct
-    exchanges carried combined, in half the passes. The driver folds the
-    <= 2 * partitions * k candidate rows by k-min union — exact for ANY
-    split by the KMV mergeability law (the k smallest distinct hashes of
-    a union are each among their own part's k smallest), the same law
-    stream_theta_ingest's gate proves against theta_sketch_ops. The
-    arbitrary-split invariance also makes the fold retry-safe: a
-    recomputed partition changes which partial a hash lands in, never the
-    folded sketch."""
+    exchanges carried combined, in half the passes. A second aggregate
+    per tag folds those <= partitions * k candidates by k-min union on
+    the executors, so the driver collects 2 rows of k hashes whatever
+    the partition count — exact for ANY split by the KMV mergeability law
+    (the k smallest distinct hashes of a union are each among their own
+    part's k smallest), the same law stream_theta_ingest's gate proves
+    against theta_sketch_ops. The arbitrary-split invariance also makes
+    the fold retry-safe: a recomputed partition changes which partial a
+    hash lands in, never the folded sketch."""
     both = docs.filter(
         (F.col("doc_id") % 2 == 0) | (F.col("doc_id") % 3 == 0)
     )
@@ -115,16 +117,21 @@ def kmv_sketch_pair(docs: DataFrame, k: int = _K) -> tuple[list[int], list[int]]
         ).alias("tag"),
         hash60(F.col("sh")).alias("h"),
     )
-    parts = (
+    rows = (
         tagged.groupBy(F.spark_partition_id().alias("pid"), "tag")
         .agg(F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("ks"))
-        .select("tag", "ks")
+        .groupBy("tag")
+        .agg(
+            F.slice(
+                F.array_sort(F.array_distinct(F.flatten(F.collect_list("ks")))),
+                1,
+                k,
+            ).alias("ks")
+        )
         .collect()
     )
-    acc: dict[str, set[int]] = {"A": set(), "B": set()}
-    for r in parts:
-        acc[r.tag].update(r.ks)
-    return sorted(acc["A"])[:k], sorted(acc["B"])[:k]
+    got = {r.tag: r.ks for r in rows}
+    return got.get("A", []), got.get("B", [])
 
 
 def theta_ops(ska: list[int], skb: list[int], k: int = _K) -> dict[str, int]:

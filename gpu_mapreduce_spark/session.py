@@ -18,6 +18,22 @@ deployment, then overridden down for local[N] testing):
     per-element ctypes boundary; Arrow batching is the fix).
   - Session timezone pinned to UTC so timestamp results agree with the
     DuckDB oracle (UTC-naive).
+  - DataFrame call-site capture off (spark.python.sql.dataFrameDebugging.
+    enabled=false). When it is on, every Column or `F.*` call walks the
+    Python stack and makes about 6 extra py4j round trips
+    (getActiveSession, a conf read, PySparkCurrentOrigin set/clear), only
+    to put the caller's file:line into error messages; building
+    q1_pricing_summary takes about 800 py4j calls with it and 185 without,
+    and about half the driver time (4-vCPU host). The trade-off: analysis
+    and ANSI errors no longer name the Python line that built the failing
+    expression; they keep the error class and the expression. It is a
+    static config, and PySpark caches it process-wide at the first Column
+    call made while a session is active.
+  - Driver heap 48g, or half the host's physical memory if that is less
+    (SPARK_GRAFT_DRIVER_MEM overrides it). In local mode the driver is the
+    only JVM, and a heap ceiling above physical memory lets it grow until
+    the kernel's OOM killer ends it: one long test session on a 16 GB host
+    reached 14-15 GB resident and was killed mid-suite.
 """
 
 from __future__ import annotations
@@ -27,6 +43,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_HALF_RAM_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+DEFAULT_DRIVER_MEM = f"{min(48 * 1024, _HALF_RAM_MB)}m"
 
 
 def get_spark(
@@ -52,7 +70,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEM))
         .config("spark.ui.enabled", str(ui).lower())
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # defensive: if a dataset ships TIMESTAMP(NANOS) parquet (which the

@@ -28,7 +28,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gpu_mapreduce_spark.sources.tables import table
+from gpu_mapreduce_spark.sources import tables
 
 NUM_VERTICES = 4000  # vertex-id space of the derived graph
 NUM_FILES = 64  # inverted-index corpus part-file count
@@ -184,7 +184,7 @@ def duckdb_with(*names: str) -> str:
 
 
 def kvpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
+    li = tables.table(spark, sf_dir, "lineitem")
     return li.select(
         F.concat("l_returnflag", "l_linestatus").alias("k"),
         F.col("l_linenumber").alias("v"),
@@ -192,12 +192,12 @@ def kvpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
+    li = tables.table(spark, sf_dir, "lineitem")
     return li.select((F.col("l_partkey") % 1000).cast("int").alias("v"))
 
 
 def words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents")
+    docs = tables.table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", F.explode(F.split("text", r"\s+")).alias("word"))
         .filter(F.col("word") != "")
@@ -205,7 +205,7 @@ def words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
+    d = tables.table(spark, sf_dir, "documents")
 
     def url(expr):
         return F.concat(F.lit(' <a href="url-'), expr.cast("string"), F.lit('">'))
@@ -228,9 +228,9 @@ def docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def edges_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    na = table(spark, sf_dir, "nation").alias("a")
-    nb = table(spark, sf_dir, "nation").alias("b")
+    li = tables.table(spark, sf_dir, "lineitem")
+    na = tables.table(spark, sf_dir, "nation").alias("a")
+    nb = tables.table(spark, sf_dir, "nation").alias("b")
     mod_graph = li.select(
         ((F.col("l_orderkey") * 37 + F.col("l_linenumber")) % NUM_VERTICES)
         .cast("bigint")
@@ -340,7 +340,7 @@ def wedges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def edges_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
+    li = tables.table(spark, sf_dir, "lineitem")
     raw = li.select(
         ((F.col("l_orderkey") * 37 + F.col("l_linenumber")) % NUM_VERTICES)
         .cast("bigint")
@@ -363,7 +363,7 @@ def edges_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
+    d = tables.table(spark, sf_dir, "documents")
     exact = d.filter(F.col("doc_id") % 5 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
     )
@@ -375,7 +375,7 @@ def corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pii_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
+    d = tables.table(spark, sf_dir, "documents")
     did = F.col("doc_id")
     email = F.when(
         did % 3 == 0,

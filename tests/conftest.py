@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 import os
+from collections import Counter
 
 import duckdb
 import pytest
@@ -78,3 +79,20 @@ def compare_frames(spark_df, ddb_rel) -> None:
     assert len(s_set) == len(d_set), f"rowcount {len(s_set)} vs {len(d_set)}"
     mismatches = [(a, b) for a, b in zip(s_set, d_set) if a != b]
     assert not mismatches, f"{len(mismatches)} row mismatches; first: {mismatches[:3]}"
+
+
+def named_actions(spark, group, call, names=None) -> Counter:
+    """Names of the jobs `call()` runs under job group `group` ("isEmpty",
+    "localCheckpoint", "parquet", ...), restricted to `names` if given."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = (
+        store.job(j).name().split(" at ")[0]
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+    )
+    return Counter(n for n in got if names is None or n in names)

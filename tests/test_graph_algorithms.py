@@ -4,13 +4,11 @@ its downstream cc is verified against a pure-Python union-find)."""
 
 from __future__ import annotations
 
-from collections import Counter
-
 from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.operators import graph, graph_iter, rmat
 from gpu_mapreduce_spark.sources import fixtures
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, named_actions
 
 
 def test_luby_invariants(spark):
@@ -629,7 +627,7 @@ def test_jp_and_greedy_initial_size_is_observed(spark):
     edges, wedges = _hand_graph(spark)
 
     def actions(group, call):
-        return _named_actions(spark, group, call, ("isEmpty", "localCheckpoint"))
+        return named_actions(spark, group, call, ("isEmpty", "localCheckpoint"))
 
     assert actions("jp_actions", lambda: graph_iter.jp_coloring(edges)) == {
         "localCheckpoint": 14,
@@ -638,23 +636,6 @@ def test_jp_and_greedy_initial_size_is_observed(spark):
     assert actions(
         "gm_actions", lambda: graph_iter.greedy_matching(wedges)
     ) == {"localCheckpoint": 7, "isEmpty": 1}
-
-
-def _named_actions(spark, group, call, names=None) -> Counter:
-    """Names of the jobs `call()` runs under job group `group` ("isEmpty",
-    "localCheckpoint", "parquet", ...), restricted to `names` if given."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    sc.setJobGroup(group, group)
-    try:
-        call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    got = (
-        store.job(j).name().split(" at ")[0]
-        for j in sc.statusTracker().getJobIdsForGroup(group)
-    )
-    return Counter(n for n in got if names is None or n in names)
 
 
 def _hash_exchanges(df) -> int:
@@ -698,7 +679,7 @@ def test_kcore_query_scans_no_parquet_once_arcs_are_warm(spark):
 
     fn = load_all()["kcore"].fn
     fn(spark, SF_DIR).collect()  # warms the edges and arcs memos
-    got = _named_actions(
+    got = named_actions(
         spark, "kcore_warm", lambda: fn(spark, SF_DIR).collect()
     )
     assert "parquet" not in got, got
@@ -711,7 +692,7 @@ def test_pagerank_checkpoints_every_third_round_only(spark):
     own."""
     edges = fixtures.edges_materialized(spark, SF_DIR)
     arcs_deg_n = graph_iter.prepare_arcs_deg(edges)
-    got = _named_actions(
+    got = named_actions(
         spark,
         "pagerank_ckpts",
         lambda: graph_iter.pagerank(edges, num_iter=10, arcs_deg_n=arcs_deg_n),
