@@ -1,13 +1,19 @@
-"""Fixed-point HyperLogLog estimator read-out — the ONE convention every
-query that turns HLL registers into a cardinality estimate must share
-(the SCALE.md hyperball_harmonic draft's risk note: the formula written
-once, reused verbatim, never re-derived per query).
+"""HyperLogLog registers and their fixed-point estimator read-out — the
+ONE convention every HLL query shares (the SCALE.md hyperball_harmonic
+draft's risk note: the formula written once, reused verbatim, never
+re-derived per query), each as a Spark column and its DuckDB mirror.
+
+Register derivation (m=64, from the portable 60-bit hash h of
+functions/portable.hash60): bucket = h mod 64; rho = leading zeros of
+the remaining 54 bits + 1, computed as 55 - length(bin(h >> 6)) with
+rho = 55 when h >> 6 == 0. Spark's and DuckDB's bin() both print minimal
+binary, so the oracles replay every register bit-identically.
 
 The float estimator alpha_m * m^2 / sum_b 2^(-reg_b) (Flajolet et al.
 2007) is not hash-gateable: IEEE summation order differs between
 engines. The portable convention instead fixes every step in integer
 arithmetic over the sparse register table (m=64, rho in 1..55, absent
-bucket == reg 0 — queries/hll.py's geometry):
+bucket == reg 0):
 
     D        = sum over ALL m buckets of 2^(RHO_MAX - reg_b)
              = (m - n_filled) * 2^RHO_MAX + sum_filled 2^(RHO_MAX - reg)
@@ -43,7 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-M = 64  # registers (queries/hll.py geometry)
+M = 64  # registers: 2^6 buckets, so the 60-bit hash leaves 54 rho bits
 RHO_MAX = 55  # 54 rho bits + 1
 ALPHA_M2_FP4 = 29_040_640  # alpha_64 * m^2 * 10^4, exact integer
 NUMER = ALPHA_M2_FP4 * (1 << RHO_MAX)  # 1046299323860805767659520
@@ -57,6 +63,23 @@ NUMER = ALPHA_M2_FP4 * (1 << RHO_MAX)  # 1046299323860805767659520
 # instead of letting Spark's non-ANSI cast null/wrap while DuckDB
 # errors — the silent-divergence failure mode the guard exists for.
 D_MIN_SAFE = NUMER // (1 << 63) + 1  # 113_441
+
+
+def bucket_rho(h: Column) -> tuple[Column, Column]:
+    """(bucket, rho) of one item from its 60-bit hash column, uncast:
+    callers cast to INT (hll) or BIGINT (hyperball)."""
+    tail = F.shiftrightunsigned(h, 6)
+    return h % M, F.when(tail == 0, RHO_MAX).otherwise(
+        RHO_MAX - F.length(F.bin(tail))
+    )
+
+
+def duckdb_bucket_rho(h: str) -> tuple[str, str]:
+    """DuckDB mirror of `bucket_rho` over a BIGINT hash SQL expression."""
+    return f"{h} % {M}", (
+        f"CASE WHEN {h} // {M} = 0 THEN {RHO_MAX}"
+        f" ELSE {RHO_MAX} - length(bin({h} // {M})) END"
+    )
 
 
 def d_from_regs() -> Column:

@@ -32,6 +32,10 @@ across uniform / skewed / sorted / adversarial-merge-order inputs.
 Pure Python on ints — usable driver-side over collected partials or
 inside mapInPandas per partition; the state is tiny
 (c * levels ~ c * log2(n / c) BIGINTs).
+
+This module also owns the sketch's wire layout: `encode` / `decode` turn
+a sketch into partial-state rows (kind, lvl, v) and back, and `read_out`
+turns a final sketch into the registered (sec, k, v) output rows.
 """
 
 from __future__ import annotations
@@ -203,3 +207,61 @@ def merge(a: QSketch, b: QSketch) -> QSketch:
             out.compactions[i] += b.compactions[i]
     out._compact_from(0)
     return out
+
+
+# Partial-state rows: (*key, kind, lvl, v) — kind 's' is a stored value v
+# at level lvl, kind 'c' is level lvl's compaction counter v. Every level
+# gets a counter row, so the depth survives empty levels.
+ROW_COLS = ("kind", "lvl", "v")
+
+
+def encode(sk: QSketch, *key) -> list[tuple]:
+    """`sk` as partial-state rows, each prefixed by the caller's key."""
+    rows = [(*key, "s", i, int(v)) for i, lv in enumerate(sk.levels) for v in lv]
+    return rows + [(*key, "c", i, int(c)) for i, c in enumerate(sk.compactions)]
+
+
+def decode(rows, key) -> dict:
+    """Inverse of `encode`: one QSketch per `key(row)` from partial-state
+    rows (anything with .kind / .lvl / .v attributes). A level counter
+    seen twice means a partial was ingested twice; the fold is not
+    idempotent, so that raises instead of corrupting it."""
+    per: dict = {}
+    for r in rows:
+        k = key(r)
+        vals, ctrs = per.setdefault(k, ({}, {}))
+        lvl, v = int(r.lvl), int(r.v)
+        if r.kind == "s":
+            vals.setdefault(lvl, []).append(v)
+        elif lvl in ctrs:
+            raise ValueError(
+                f"qsketch.decode: partial {k!r} ingested twice —"
+                " duplicated partials corrupt the fold"
+            )
+        else:
+            ctrs[lvl] = v
+    out = {}
+    for k, (vals, ctrs) in per.items():
+        depth = max(ctrs) + 1
+        out[k] = QSketch(
+            levels=[vals.get(i, []) for i in range(depth)],
+            compactions=[ctrs[i] for i in range(depth)],
+        )
+    return out
+
+
+def read_out(sk: QSketch, pcts, maxl: int, who: str) -> list[tuple]:
+    """Registered read-out rows (sec, k, v) of a final sketch: the full
+    state ('state', lvl, value) and counters ('ctr', lvl, counter), the
+    exact weight ('n', -1, n) and the quantile reads ('q', pct, value).
+    Raises when the depth exceeds the oracle's MAXL compaction stages."""
+    if len(sk.levels) > maxl + 1:
+        raise ValueError(
+            f"{who}: fold depth {len(sk.levels)} exceeds the oracle unroll"
+            f" envelope (MAXL={maxl}); regenerate the oracle with a deeper"
+            " unroll"
+        )
+    out = [("state", lvl, v) for lvl, lv in enumerate(sk.levels) for v in lv]
+    out += [("ctr", lvl, c) for lvl, c in enumerate(sk.compactions)]
+    out.append(("n", -1, sk.n))
+    return out + [("q", pct, sk.quantile(pct, 100)) for pct in pcts]

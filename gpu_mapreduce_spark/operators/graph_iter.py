@@ -1076,6 +1076,16 @@ def betweenness_sources(
     return bc, depth
 
 
+def _pointer_jump(par: DataFrame) -> DataFrame:
+    """One pointer jump p = p(p) over (c, p), flagging the rows that moved."""
+    nxt = par.select(F.col("c").alias("jc"), F.col("p").alias("jp"))
+    return par.join(F.broadcast(nxt), par.p == F.col("jc")).select(
+        "c",
+        F.col("jp").alias("p"),
+        (F.col("jp") != F.col("p")).cast("int").alias("moved"),
+    )
+
+
 def boruvka_msf(
     wedges: DataFrame,
     max_rounds: int = 20,
@@ -1211,7 +1221,7 @@ def boruvka_msf(
             .alias("p"),
         )
         # isolated components (no cross edge) point to themselves
-        hooked, _ = materialize(
+        hooked = (
             comp.select(F.col("c").alias("ac"))
             .distinct()
             .join(par, F.col("ac") == par.c, "left")
@@ -1220,30 +1230,16 @@ def boruvka_msf(
                 F.coalesce("p", F.col("ac")).alias("p"),
             )
         )
-        par = hooked
-        # pointer-jump to the roots (depth halves per jump). Per jump the
-        # plan is par ⋈ par — 2^j joins of the last CHECKPOINTED par, so
-        # the lineage stays shallow while the loop runs few jumps; the
-        # convergence probe rides the SAME aggregate action (moved count),
-        # one driver scalar per jump, no per-jump checkpoint.
-        for _j in range(max_jumps):
-            nxt = par.select(F.col("c").alias("jc"), F.col("p").alias("jp"))
-            par2 = par.join(F.broadcast(nxt), par.p == F.col("jc")).select(
-                "c",
-                F.col("jp").alias("p"),
-                (F.col("jp") != F.col("p")).cast("int").alias("moved"),
-            )
-            moved = par2.agg(F.sum("moved")).collect()[0][0] or 0
-            par = par2.select("c", "p")
-            if moved == 0:
-                break
-            max_jumps_used = max(max_jumps_used, _j + 1)
-        else:
-            raise RuntimeError(
-                f"boruvka_msf: pointer-jump not settled in {max_jumps}"
-                " jumps; raise max_jumps"
-            )
-        par, _ = materialize(par, supersedes=hooked)
+        # pointer-jump to the roots (depth halves per jump); each jump is
+        # checkpointed with its moved count observed in the same action
+        par, jumps = fixpoint_observed(
+            hooked,
+            _pointer_jump,
+            lambda: F.sum("moved"),
+            lambda moved: not moved,
+            max_iter=max_jumps,
+        )
+        max_jumps_used = max(max_jumps_used, jumps - 1)
         # relabel every vertex to its component's new root
         comp, _ = materialize(
             comp.join(
@@ -1274,25 +1270,19 @@ def boruvka_msf(
 
 def _hyperball_init(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(bidirected arcs, round-0 state): each vertex's one-element sketch
-    of {itself} — hll_rollup's register geometry (portable hash60, m=64,
-    rho_max=55) applied to the vertex id string."""
+    of {itself} — functions/hllest.bucket_rho applied to the portable
+    hash60 of the vertex id string."""
+    from gpu_mapreduce_spark.functions import hllest
     from gpu_mapreduce_spark.functions.portable import hash60
 
-    m, rho_max = 64, 55  # queries/hll.py's register geometry
     arcs = edges.select("src", "dst").unionAll(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     verts = arcs.select(F.col("src").alias("v")).distinct()
-    h = hash60(F.col("v").cast("string"))
-    tail = F.shiftrightunsigned(h, 6)
+    b, reg = hllest.bucket_rho(hash60(F.col("v").cast("string")))
     state, _ = materialize(
         verts.select(
-            "v",
-            (h % m).cast("bigint").alias("b"),
-            F.when(tail == 0, rho_max)
-            .otherwise(rho_max - F.length(F.bin(tail)))
-            .cast("bigint")
-            .alias("reg"),
+            "v", b.cast("bigint").alias("b"), reg.cast("bigint").alias("reg")
         )
     )
     return arcs, state

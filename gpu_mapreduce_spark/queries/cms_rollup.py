@@ -14,9 +14,9 @@ DuckDB oracle computes the daily cells DIRECTLY from raw events. Hash
 equality of the full (d, j, b, c) cell table across engines IS the
 linearity law, exercised on 30 days x 24 hours of real grouping keys.
 
-The hash family is cms_heavy_hitters' verbatim (portable 60-bit
-md5-prefix of 'cms{{j}}|' || key, mod w — queries/sketches.py:45), so the
-folded daily sketch is THE estimator already pinned: the one-sided
+The hash family is cms_heavy_hitters' (functions/cms.py, one
+definition for every CMS query), so the folded daily sketch is THE
+estimator already pinned: the one-sided
 estimate law (min over rows >= exact count, collisions one-sided) is
 re-checked at the rolled-up grain in tests/test_cms_rollup.py, keeping
 the estimator read-out out of the gate exactly as hll_rollup keeps the
@@ -36,20 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gpu_mapreduce_spark.functions.portable import hash60
+from gpu_mapreduce_spark.functions import cms
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources.tables import table
-
-_D = 4  # hash rows (sketches.py's family)
-_W = 16  # buckets per row
-
-
-def _bucket_sql(j: int) -> str:
-    return f"('0x' || substr(md5('cms{j}|' || k), 1, 15))::BIGINT % {_W}"
-
-
-def _bucket_col(j: int):
-    return hash60(F.concat(F.lit(f"cms{j}|"), F.col("k"))) % _W
 
 
 @register(
@@ -64,10 +53,8 @@ def _bucket_col(j: int):
             FROM events
         ),
         entries AS (
-            SELECT d, g.j, CASE g.j
-                {" ".join(f"WHEN {j} THEN {_bucket_sql(j)}" for j in range(_D))}
-            END AS b
-            FROM e, generate_series(0, {_D - 1}) g(j)
+            SELECT d, g.j, {cms.duckdb_entries("k")} AS b
+            FROM e, generate_series(0, {cms.D - 1}) g(j)
         )
         SELECT d, CAST(j AS INT) AS j, CAST(b AS INT) AS b,
                CAST(COUNT(*) AS BIGINT) AS c
@@ -84,18 +71,7 @@ def cms_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("k"),
     )
     entries = ev.select(
-        "d",
-        "hh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"), _bucket_col(j).alias("b")
-                    )
-                    for j in range(_D)
-                ]
-            )
-        ).alias("e"),
+        "d", "hh", cms.entries(F.col("k")).alias("e")
     ).select("d", "hh", "e.j", "e.b")
     hourly = entries.groupBy("d", "hh", "j", "b").agg(
         F.count(F.lit(1)).cast("bigint").alias("c_h")

@@ -34,8 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gpu_mapreduce_spark.functions import cms
 from gpu_mapreduce_spark.plans.scratch import sink_roundtrip
-from gpu_mapreduce_spark.queries.cms_rollup import _bucket_col, _D
 from gpu_mapreduce_spark.registry import QUERIES, register
 from gpu_mapreduce_spark.sources import fixtures
 from gpu_mapreduce_spark.sources.tables import table
@@ -49,16 +49,7 @@ def _entries(spark_df: DataFrame) -> DataFrame:
     """(event_id, d, j, b) — one row per event per hash row, the
     cms_merge_rollup projection plus the id for the split."""
     return spark_df.select(
-        "event_id",
-        "d",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("j"), _bucket_col(j).alias("b"))
-                    for j in range(_D)
-                ]
-            )
-        ).alias("e"),
+        "event_id", "d", cms.entries(F.col("k")).alias("e")
     ).select("event_id", "d", "e.j", "e.b")
 
 

@@ -5,29 +5,26 @@ event_funnel reduces the per-user stage timestamps to a one-row report;
 this registration exposes the stage table itself (user_id, t1, t2, t3 —
 the exact per-user state a streaming funnel maintains) and anchors the
 suite's last missing streaming shape: streaming/pipeline.
-funnel_stages_stream runs the SAME semantics as a bounded-state
-applyInPandasWithState job (three BIGINT timestamps per user) and
-tests/test_streaming.py asserts the two halves are row-identical — the
-events_attributed equality discipline applied to custom per-key state.
+funnel_stages_stream_buffered runs the SAME semantics as an
+applyInPandasWithState job and tests/test_streaming.py asserts the two
+halves are row-identical — the events_attributed equality discipline
+applied to custom per-key state.
 
 Scale notes (100 TB): identical topology to event_funnel (chained
 user-keyed min-reductions, one timestamp of state per user per stage,
 no window over a user's event list) minus the final global reduce —
 the output is user-cardinality, which is what a funnel SERVICE stores.
 
-Streaming-half delivery contract: the bounded 3-timestamp fold
-(funnel_stages_stream) is exact when a user's history arrives within one
-trigger (the availableNow drain it is equality-tested under) or in
-time-ordered batches; consumers keep the row with the MAX emit_seq per
-user_id (a monotone marker held in state, so 'last' is derivable from
-row contents on unordered sinks). Under ARBITRARY cross-batch order an
-earlier-arriving view can open a conversion window whose clicks were
-discarded in prior batches — funnel_stages_stream_buffered (r08) is the
-watermark-horizon event-buffer variant that recovers them, pruning
-buffers by reachability (clicks dead past t1 + conv, purchases past
-t1 + 2·conv, since t1 only decreases); tests/test_streaming.py proves
-it equal to the batch half on a time-reversed feed the bounded fold
-provably gets wrong.
+Streaming-half delivery contract: consumers keep the row with the MAX
+emit_seq per user_id (a monotone marker held in state, so 'last' is
+derivable from row contents on unordered sinks). The fold is exact under
+ARBITRARY cross-batch order: its state buffers the clicks and purchases
+that an earlier-arriving view could still pull into a conversion window,
+pruned by reachability (clicks dead past t1 + conv, purchases past
+t1 + 2·conv, since t1 only decreases) and by the watermark;
+tests/test_streaming.py proves it equal to the batch half on a
+one-trigger drain, on time-ordered and time-reversed two-batch feeds and
+on a watermarked feed.
 """
 
 from __future__ import annotations

@@ -55,6 +55,25 @@ def _arcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _warcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-memoized dst-partitioned weighted arc table (shared by sssp
+    and sssp_multi): integer weight units wu = (31·src + dst) % 97 + 1.
+    Derived from the materialized edge list: weighted_arcs reads its input
+    twice (both directions), so an unmaterialized fixture would run the
+    whole edges derivation twice."""
+
+    def build() -> DataFrame:
+        e = fixtures.edges_materialized(spark, sf_dir)
+        wu = e.select(
+            "src",
+            "dst",
+            ((F.col("src") * 31 + F.col("dst")) % 97 + 1).cast("bigint").alias("wu"),
+        )
+        return graph_iter.prepare_warcs(graph_iter.weighted_arcs(wu))
+
+    return fixtures.derived(spark, sf_dir, "warcs_by_dst", build)
+
+
 @register(
     "cc_find",
     bench=True,
@@ -193,19 +212,7 @@ def sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums of k/97 weights, so du = 97·dist is exact). Unreached vertices are
     omitted (the reference likewise only emits vertices whose distance was
     ever set, oink/sssp.cpp:170-172)."""
-    # derive units from the materialized edge list: weighted_arcs references
-    # its input twice (both directions), so an unmaterialized fixture would
-    # run the whole edges derivation twice
-    def build_warcs() -> DataFrame:
-        e = fixtures.edges_materialized(spark, sf_dir)
-        wu = e.select(
-            "src",
-            "dst",
-            ((F.col("src") * 31 + F.col("dst")) % 97 + 1).cast("bigint").alias("wu"),
-        )
-        return graph_iter.prepare_warcs(graph_iter.weighted_arcs(wu))
-
-    warcs = fixtures.derived(spark, sf_dir, "warcs_by_dst", build_warcs)
+    warcs = _warcs(spark, sf_dir)
     dist, _rounds = graph_iter.sssp(warcs, _SSSP_SOURCE, arcs=warcs)
     return dist.select("v", "du", (F.col("du") / F.lit(97.0)).alias("dist"))
 
@@ -253,17 +260,7 @@ def sssp_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source driver loop); batching sources into the frontier key makes
     total rounds = max per-source rounds, not the sum. Shares the prepared
     weighted-arc table with sssp."""
-
-    def build_warcs() -> DataFrame:
-        e = fixtures.edges_materialized(spark, sf_dir)
-        wu = e.select(
-            "src",
-            "dst",
-            ((F.col("src") * 31 + F.col("dst")) % 97 + 1).cast("bigint").alias("wu"),
-        )
-        return graph_iter.prepare_warcs(graph_iter.weighted_arcs(wu))
-
-    warcs = fixtures.derived(spark, sf_dir, "warcs_by_dst", build_warcs)
+    warcs = _warcs(spark, sf_dir)
     dist, _rounds = graph_iter.sssp_multi(
         warcs, list(_SSSP_SOURCES), arcs=warcs
     )

@@ -8,11 +8,10 @@ corpus size, built by ONE map-side-combinable 64-group max aggregation
 over the raw (globally un-deduplicated) shingle stream: max is idempotent,
 so the stream needs no distinct pass, which is HLL's whole point at
 100 TB (a distinct would shuffle the corpus; the sketch shuffles 64
-partial registers per partition). The register derivation is pure integer
-arithmetic on the portable 60-bit hash (bucket = h mod 64; rho = leading
-zeros of the remaining 54 bits + 1, computed as 55 - length(bin(v)) with
-the v=0 guard — Spark's and DuckDB's bin() both print minimal binary, so
-the DuckDB oracle replays every register bit-identically).
+partial registers per partition). The register derivation is
+functions/hllest.bucket_rho: pure integer arithmetic on the portable
+60-bit hash that the DuckDB oracle replays bit-identically (hllest's
+mirror).
 
 The float estimate alpha*m^2/sum(2^-rho) is deliberately NOT in the
 oracle-checked output (IEEE summation order is engine-dependent);
@@ -26,12 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gpu_mapreduce_spark.functions import hllest
 from gpu_mapreduce_spark.operators import dedup
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources.tables import table, widen
 
-_M = 64  # registers (2^6 buckets; 60-bit hash leaves 54 rho bits)
-_RHO_MAX = 55  # 54 zero bits + 1
+_BUCKET_SQL, _RHO_SQL = hllest.duckdb_bucket_rho("h")
 
 
 def hll_registers(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -44,16 +43,9 @@ def hll_registers(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     sh = dedup.shingle_set(docs, text_col=text_col)
     hv = sh.select(hash60(F.col("sh")).alias("h"))
-    rb = hv.select(
-        (F.col("h") % _M).cast("int").alias("bucket"),
-        F.shiftrightunsigned("h", 6).alias("v"),
-    )
-    rr = rb.select(
-        "bucket",
-        F.when(F.col("v") == 0, _RHO_MAX)
-        .otherwise(_RHO_MAX - F.length(F.bin("v")))
-        .cast("int")
-        .alias("rho"),
+    bucket, rho = hllest.bucket_rho(F.col("h"))
+    rr = hv.select(
+        bucket.cast("int").alias("bucket"), rho.cast("int").alias("rho")
     )
     return (
         rr.groupBy("bucket")
@@ -84,10 +76,7 @@ def hll_registers(docs: DataFrame, text_col: str = "text") -> DataFrame:
         ),
         hv AS (SELECT ('0x' || substr(md5(s), 1, 15))::BIGINT AS h FROM sh),
         rr AS (
-            SELECT CAST(h % {_M} AS INT) AS bucket,
-                   CASE WHEN h // {_M} = 0 THEN {_RHO_MAX}
-                        ELSE {_RHO_MAX} - length(bin(h // {_M}))
-                   END AS rho
+            SELECT CAST({_BUCKET_SQL} AS INT) AS bucket, {_RHO_SQL} AS rho
             FROM hv
         )
         SELECT bucket, CAST(MAX(rho) AS INT) AS reg

@@ -18,11 +18,10 @@ DuckDB oracle computes the daily registers DIRECTLY from raw events.
 Hash equality of (d, bucket, reg) rows across engines IS the
 mergeability law, exercised on 30 days x 24 hours of real grouping keys.
 
-Register derivation is hll.py's verbatim (portable 60-bit hash of the
-user_id string; bucket = h mod 64, rho = 55 - length(bin(h div 64)) with
-the zero guard) — pure integer arithmetic both engines replay
-bit-identically. The float estimate stays out of the gate
-(tests/test_hll.py pins estimate accuracy for this family).
+Register derivation is functions/hllest.bucket_rho over the portable
+60-bit hash of the user_id string, replayed in the oracle by its DuckDB
+mirror. The float estimate stays out of the gate (tests/test_hll.py
+pins estimate accuracy for this family).
 
 100 TB: the raw stream is touched ONCE at the finest grain; every
 coarser grain is a fold over m=64-row register tables per group — the
@@ -35,10 +34,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gpu_mapreduce_spark.functions import hllest
 from gpu_mapreduce_spark.functions.portable import hash60
-from gpu_mapreduce_spark.queries.hll import _M, _RHO_MAX
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources.tables import table
+
+_BUCKET_SQL, _RHO_SQL = hllest.duckdb_bucket_rho("h")
 
 
 @register(
@@ -54,10 +55,7 @@ from gpu_mapreduce_spark.sources.tables import table
             FROM events
         ),
         rr AS (
-            SELECT d, CAST(h % {_M} AS INT) AS bucket,
-                   CASE WHEN h // {_M} = 0 THEN {_RHO_MAX}
-                        ELSE {_RHO_MAX} - length(bin(h // {_M}))
-                   END AS rho
+            SELECT d, CAST({_BUCKET_SQL} AS INT) AS bucket, {_RHO_SQL} AS rho
             FROM hv
         )
         SELECT d, bucket, CAST(MAX(rho) AS INT) AS reg
@@ -69,16 +67,12 @@ def hll_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed as a register-wise MERGE of per-(day, hour) partial
     sketches — hash-equal to the oracle's direct daily derivation."""
     ev = table(spark, sf_dir, "events")
-    h = hash60(F.col("user_id").cast("string"))
-    v = F.shiftrightunsigned(h, 6)
+    bucket, rho = hllest.bucket_rho(hash60(F.col("user_id").cast("string")))
     rr = ev.select(
         F.date_format("ts", "yyyy-MM-dd").alias("d"),
         F.date_format("ts", "HH").alias("hh"),
-        (h % _M).cast("int").alias("bucket"),
-        F.when(v == 0, _RHO_MAX)
-        .otherwise(_RHO_MAX - F.length(F.bin(v)))
-        .cast("int")
-        .alias("rho"),
+        bucket.cast("int").alias("bucket"),
+        rho.cast("int").alias("rho"),
     )
     hourly = rr.groupBy("d", "hh", "bucket").agg(
         F.max("rho").alias("reg_h")

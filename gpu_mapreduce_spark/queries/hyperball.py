@@ -24,11 +24,11 @@ radius-_R balls — register-identical, not approximately right.
 Oracle: _R unrolled rounds of the same register algebra in MATERIALIZED
 DuckDB CTEs (the kcore/msf unroll discipline) — per round one
 arcs ⋈ state join + per-(v, b) MAX — from the same canonicalized R-MAT
-graph and hll.py's verbatim register derivation (60-bit md5-prefix
-hash; b = h mod 64; rho = 55 − bitlength(h div 64) with the zero
-guard). Round count is FIXED by construction on both sides, so there
-is no truncation risk to guard: extra rounds would be fixed-point
-no-ops, fewer would change both engines identically.
+graph and functions/hllest's register derivation (its DuckDB mirror
+over the 60-bit md5-prefix hash of the vertex id). Round count is FIXED
+by construction on both sides, so there is no truncation risk to guard:
+extra rounds would be fixed-point no-ops, fewer would change both
+engines identically.
 
 100 TB: per round ONE join of the arc list against a state table of
 <= 64 rows per vertex — only (v, b, reg) BIGINT triples shuffle, the
@@ -44,21 +44,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gpu_mapreduce_spark.functions import hllest
 from gpu_mapreduce_spark.operators import graph_iter
 from gpu_mapreduce_spark.queries.kcore_rmat import _canon_arcs
 from gpu_mapreduce_spark.queries.rmat_gen import _rmat_canon_sql
 from gpu_mapreduce_spark.registry import register
 
 _R = 3  # fixed radius: distance-resolved, below the ~6-8 R-MAT diameter
-_M = 64
-_RHO_MAX = 55
 
 
 def _hyperball_cte_sql(rounds: int = _R) -> str:
     """The WITH-chain through hb{rounds}: canonical R-MAT graph, register
-    init (hll.py's verbatim derivation), and `rounds` unrolled register
-    folds — shared with queries/hyperball_harmonic.py, whose estimator
-    read-out layers on the same hb{r} states."""
+    init (hllest's derivation), and `rounds` unrolled register folds —
+    shared with queries/hyperball_harmonic.py, whose estimator read-out
+    layers on the same hb{r} states."""
+    bucket, rho = hllest.duckdb_bucket_rho("h")
     parts = [
         _rmat_canon_sql(),
         f""", hverts AS MATERIALIZED (
@@ -68,10 +68,8 @@ def _hyperball_cte_sql(rounds: int = _R) -> str:
             SELECT src, dst FROM canon
             UNION ALL SELECT dst AS src, src AS dst FROM canon
         ), hb0 AS MATERIALIZED (
-            SELECT v, CAST(h % {_M} AS BIGINT) AS b,
-                   CAST(CASE WHEN h // {_M} = 0 THEN {_RHO_MAX}
-                             ELSE {_RHO_MAX} - length(bin(h // {_M}))
-                        END AS BIGINT) AS reg
+            SELECT v, CAST({bucket} AS BIGINT) AS b,
+                   CAST({rho} AS BIGINT) AS reg
             FROM (SELECT v,
                          ('0x' || substr(md5(CAST(v AS VARCHAR)), 1, 15))
                              ::BIGINT AS h

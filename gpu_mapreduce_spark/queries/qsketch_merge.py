@@ -63,16 +63,17 @@ PCTS = (1, 25, 50, 75, 99)
 _PARTIAL_SCHEMA = "g int, kind string, lvl int, v long"
 
 
+def _partial_frame(sk: qsketch.QSketch, keys: dict) -> pd.DataFrame:
+    return pd.DataFrame(
+        qsketch.encode(sk, *keys.values()), columns=[*keys, *qsketch.ROW_COLS]
+    )
+
+
 def _build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One bulk partial per group: state rows kind='s' (lvl, value) and
-    counter rows kind='c' (lvl, counter)."""
-    g = int(pdf["g"].iloc[0])
+    """One bulk partial per group, keyed by every input column but `val`
+    (g here; src and g in qsketch_rollup)."""
     sk = qsketch.bulk_build([int(x) for x in pdf["val"]])
-    rows = [
-        (g, "s", i, int(v)) for i, lv in enumerate(sk.levels) for v in lv
-    ]
-    rows += [(g, "c", i, int(c)) for i, c in enumerate(sk.compactions)]
-    return pd.DataFrame(rows, columns=["g", "kind", "lvl", "v"])
+    return _partial_frame(sk, pdf.drop(columns="val").iloc[0].to_dict())
 
 
 def sketch_partials(df: DataFrame, col: str) -> DataFrame:
@@ -99,14 +100,8 @@ def _map_partials(it):
         if len(pdf):
             g = int(pdf["g"].iloc[0])
             vals.extend(int(x) for x in pdf["val"])
-    if g is None:
-        return
-    sk = qsketch.bulk_build(vals)
-    rows = [
-        (g, "s", i, int(v)) for i, lv in enumerate(sk.levels) for v in lv
-    ]
-    rows += [(g, "c", i, int(c)) for i, c in enumerate(sk.compactions)]
-    yield pd.DataFrame(rows, columns=["g", "kind", "lvl", "v"])
+    if g is not None:
+        yield _partial_frame(qsketch.bulk_build(vals), {"g": g})
 
 
 def sketch_partials_map(df: DataFrame, col: str) -> list[qsketch.QSketch]:
@@ -126,52 +121,23 @@ def sketch_partials_map(df: DataFrame, col: str) -> list[qsketch.QSketch]:
 
 
 def _rebuild(rows, groups: "set[int] | None") -> list[qsketch.QSketch]:
-    """Rebuild QSketch objects from collected partial-state rows,
-    g-ascending. `groups` (when given) is the exact group set that must
-    be present — a missing group would silently drop its weight."""
-    per: dict[int, dict[str, dict[int, object]]] = {}
-    for r in rows:
-        d = per.setdefault(int(r.g), {"s": {}, "c": {}})
-        if r.kind == "s":
-            d["s"].setdefault(int(r.lvl), []).append(int(r.v))
-        else:
-            d["c"][int(r.lvl)] = int(r.v)
+    """Decode collected partial-state rows into sketches, g-ascending.
+    `groups` (when given) is the exact group set that must be present —
+    a missing group would silently drop its weight."""
+    per = qsketch.decode(rows, lambda r: int(r.g))
     if groups is not None and set(per) != groups:
         raise ValueError(
             "quantile_sketch_merge: partial group set"
             f" {sorted(per)} != expected {sorted(groups)}"
         )
-    out = []
-    for g in sorted(per):
-        d = per[g]
-        depth = max(d["c"]) + 1
-        sk = qsketch.QSketch()
-        sk.levels = [sorted(d["s"].get(i, [])) for i in range(depth)]
-        sk.compactions = [int(d["c"][i]) for i in range(depth)]
-        out.append(sk)
-    return out
+    return [per[g] for g in sorted(per)]
 
 
 def fold_and_read(parts: list[qsketch.QSketch]) -> list[tuple]:
-    """Canonical fold + read-out rows (sec, k, v): the full state
-    ('state' lvl val multiset + 'ctr' lvl counter), exact weight
-    ('n', -1, n), and quantile reads ('q', pct, value)."""
-    final = qsketch.fold_tree(parts)
-    if len(final.levels) > MAXL + 1:
-        raise ValueError(
-            f"quantile_sketch_merge: fold depth {len(final.levels)}"
-            f" exceeds the oracle unroll envelope (MAXL={MAXL});"
-            " regenerate the oracle with a deeper unroll"
-        )
-    out = [
-        ("state", lvl, int(v))
-        for lvl, lv in enumerate(final.levels)
-        for v in lv
-    ]
-    out += [("ctr", lvl, int(c)) for lvl, c in enumerate(final.compactions)]
-    out.append(("n", -1, final.n))
-    out += [("q", pct, final.quantile(pct, 100)) for pct in PCTS]
-    return out
+    """Canonical fold + read-out rows (sec, k, v) — see qsketch.read_out."""
+    return qsketch.read_out(
+        qsketch.fold_tree(parts), PCTS, MAXL, "quantile_sketch_merge"
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -44,12 +44,12 @@ moves kilobytes.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_mapreduce_spark.functions import qsketch
 from gpu_mapreduce_spark.queries.qsketch_merge import (
+    _build_group,
     _stage_sql,
     CAP,
     MAXL,
@@ -67,69 +67,24 @@ ROUNDS_B = (MAX_SOURCES - 1).bit_length()  # cross-source fold rounds
 _PARTIAL_SCHEMA = "src string, g int, kind string, lvl int, v long"
 
 
-def _build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    src = str(pdf["src"].iloc[0])
-    g = int(pdf["g"].iloc[0])
-    sk = qsketch.bulk_build([int(x) for x in pdf["val"]])
-    rows = [
-        (src, g, "s", i, int(v))
-        for i, lv in enumerate(sk.levels)
-        for v in lv
-    ]
-    rows += [
-        (src, g, "c", i, int(c)) for i, c in enumerate(sk.compactions)
-    ]
-    return pd.DataFrame(rows, columns=["src", "g", "kind", "lvl", "v"])
-
-
-def _rebuild_per_source(rows) -> dict[str, list[qsketch.QSketch]]:
-    per: dict[str, dict[int, dict[str, dict[int, object]]]] = {}
-    for r in rows:
-        d = per.setdefault(str(r.src), {}).setdefault(
-            int(r.g), {"s": {}, "c": {}}
+def _per_source_slots(rows) -> dict[str, list["qsketch.QSketch | None"]]:
+    """Decode collected partial-state rows into GP fixed slots per source
+    (None = an empty hash slot: fold_slots passes it through)."""
+    per = qsketch.decode(rows, lambda r: (str(r.src), int(r.g)))
+    unknown = {k for k in per if k[1] not in range(GP)}
+    if unknown:
+        raise ValueError(
+            f"qsketch_rollup: out-of-range partial groups {sorted(unknown)}"
         )
-        if r.kind == "s":
-            d["s"].setdefault(int(r.lvl), []).append(int(r.v))
-        else:
-            d["c"][int(r.lvl)] = int(r.v)
-    out: dict[str, list[qsketch.QSketch | None]] = {}
-    for src, groups in per.items():
-        unknown = set(groups) - set(range(GP))
-        if unknown:
-            raise ValueError(
-                f"qsketch_rollup: source {src!r} has out-of-range"
-                f" partial groups {sorted(unknown)}"
-            )
-        slots: list[qsketch.QSketch | None] = []
-        for g in range(GP):
-            if g not in groups:
-                slots.append(None)  # empty hash slot: fold_slots passthrough
-                continue
-            d = groups[g]
-            depth = max(d["c"]) + 1
-            sk = qsketch.QSketch()
-            sk.levels = [sorted(d["s"].get(i, [])) for i in range(depth)]
-            sk.compactions = [int(d["c"][i]) for i in range(depth)]
-            slots.append(sk)
-        out[src] = slots
-    return out
+    return {
+        src: [per.get((src, g)) for g in range(GP)]
+        for src in {src for src, _ in per}
+    }
 
 
 def _readout(src: str, sk: qsketch.QSketch) -> list[tuple]:
-    if len(sk.levels) > MAXL + 1:
-        raise ValueError(
-            f"qsketch_rollup: fold depth {len(sk.levels)} for {src!r}"
-            f" exceeds the oracle unroll envelope (MAXL={MAXL})"
-        )
-    out = [
-        ("state", src, lvl, int(v))
-        for lvl, lv in enumerate(sk.levels)
-        for v in lv
-    ]
-    out += [("ctr", src, lvl, int(c)) for lvl, c in enumerate(sk.compactions)]
-    out.append(("n", src, -1, sk.n))
-    out += [("q", src, pct, sk.quantile(pct, 100)) for pct in PCTS]
-    return out
+    rows = qsketch.read_out(sk, PCTS, MAXL, f"qsketch_rollup[{src!r}]")
+    return [(sec, src, k, v) for sec, k, v in rows]
 
 
 def _phase_ctes(
@@ -298,7 +253,7 @@ def qsketch_group_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = parts.groupBy("src", "g").applyInPandas(
         _build_group, schema=_PARTIAL_SCHEMA
     )
-    per = _rebuild_per_source(staged.collect())  # bounded: src*GP states
+    per = _per_source_slots(staged.collect())  # bounded: src*GP states
     if len(per) > MAX_SOURCES:
         raise ValueError(
             f"qsketch_group_rollup: {len(per)} sources exceed the"

@@ -84,39 +84,16 @@ def _sliced_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     return fixtures.derived_dir(spark, sf_dir, "qsketch_stream_dir", write)
 
 
-def _rebuild_unique(rows) -> list["qsketch.QSketch | None"]:
-    """Rebuild the P group slots from ingested partial rows, raising
-    loudly if any group's counters appear twice (a duplicated partial
-    would corrupt the non-idempotent fold — see module docstring)."""
-    per: dict[int, dict[str, dict[int, object]]] = {}
-    for r in rows:
-        d = per.setdefault(int(r.g), {"s": {}, "c": {}})
-        if r.kind == "s":
-            d["s"].setdefault(int(r.lvl), []).append(int(r.v))
-        else:
-            if int(r.lvl) in d["c"]:
-                raise ValueError(
-                    f"qsketch_stream: group {r.g} ingested twice —"
-                    " duplicated partial dirs corrupt the fold"
-                )
-            d["c"][int(r.lvl)] = int(r.v)
+def _slots(rows) -> list["qsketch.QSketch | None"]:
+    """Decode the ingested partial rows into the P group slots (None = no
+    partial for that group; qsketch.decode raises on a duplicate)."""
+    per = qsketch.decode(rows, lambda r: int(r.g))
     unknown = set(per) - set(range(P))
     if unknown:
         raise ValueError(
             f"qsketch_stream: out-of-range groups {sorted(unknown)}"
         )
-    slots: list[qsketch.QSketch | None] = []
-    for g in range(P):
-        if g not in per:
-            slots.append(None)
-            continue
-        d = per[g]
-        depth = max(d["c"]) + 1
-        sk = qsketch.QSketch()
-        sk.levels = [sorted(d["s"].get(i, [])) for i in range(depth)]
-        sk.compactions = [int(d["c"][i]) for i in range(depth)]
-        slots.append(sk)
-    return slots
+    return [per.get(g) for g in range(P)]
 
 
 @register(
@@ -159,7 +136,7 @@ def qsketch_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         partials = spark.read.schema(_PARTIAL_SCHEMA).parquet(
             f"{path}/ingest_*"
         )
-        slots = _rebuild_unique(partials.collect())  # bounded state rows
+        slots = _slots(partials.collect())  # bounded state rows
         missing = [g for g, s in enumerate(slots) if s is None]
         if missing:
             raise ValueError(

@@ -16,8 +16,9 @@ guarantees est >= exact always, with overestimates from bucket
 collisions; w is deliberately smaller than the fixture vocabulary so the
 collisions actually happen and the report shows the trade
 (tests/test_sketches.py pins the one-sided error and that collisions are
-present). All hashes are the portable md5-hex-slice (functions/
-portable.hash60), so DuckDB replays sketch construction bit-identically.
+present). The sketch geometry and bucket hash are functions/cms.py's
+(the portable md5-hex-slice), so DuckDB replays sketch construction
+bit-identically.
 
 Scale notes (100 TB): token explode is one scan; the sketch groupBy has
 d*w = 64 groups (partial agg makes the shuffle d*w rows per partition);
@@ -31,25 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gpu_mapreduce_spark.functions.portable import hash60
+from gpu_mapreduce_spark.functions import cms
 from gpu_mapreduce_spark.operators import textstats as ts
 from gpu_mapreduce_spark.queries.textstats import _TOKS
 from gpu_mapreduce_spark.registry import register
 from gpu_mapreduce_spark.sources.tables import table, widen
 
-_D = 4  # hash rows
-_W = 16  # buckets per row — below the fixture vocab so collisions occur
 _TOPK = 20
-
-
-def _bucket_sql(j: int) -> str:
-    return (
-        f"('0x' || substr(md5('cms{j}|' || tok), 1, 15))::BIGINT % {_W}"
-    )
-
-
-def _bucket_col(j: int):
-    return hash60(F.concat(F.lit(f"cms{j}|"), F.col("tok"))) % _W
 
 
 @register(
@@ -68,20 +57,16 @@ def _bucket_col(j: int):
             SELECT tok, cnt FROM exact ORDER BY cnt DESC, tok LIMIT {_TOPK}
         ),
         entries AS (
-            SELECT g.j, CASE g.j
-                {" ".join(f"WHEN {j} THEN {_bucket_sql(j)}" for j in range(_D))}
-            END AS b
-            FROM tok, generate_series(0, {_D - 1}) g(j)
+            SELECT g.j, {cms.duckdb_entries("tok")} AS b
+            FROM tok, generate_series(0, {cms.D - 1}) g(j)
         ),
         sketch AS (
             SELECT j, b, CAST(COUNT(*) AS BIGINT) AS c
             FROM entries GROUP BY j, b
         ),
         probes AS (
-            SELECT t.tok, t.cnt, g.j, CASE g.j
-                {" ".join(f"WHEN {j} THEN {_bucket_sql(j)}" for j in range(_D))}
-            END AS b
-            FROM topk t, generate_series(0, {_D - 1}) g(j)
+            SELECT t.tok, t.cnt, g.j, {cms.duckdb_entries("tok")} AS b
+            FROM topk t, generate_series(0, {cms.D - 1}) g(j)
         )
         SELECT p.tok, p.cnt, MIN(s.c) AS est,
                CAST(MIN(s.c) - p.cnt AS BIGINT) AS overcount
@@ -92,7 +77,7 @@ def _bucket_col(j: int):
 )
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-{_TOPK} corpus tokens with their count-min estimates:
-    (tok, cnt, est, overcount). The sketch is d={_D} rows × w={_W} buckets
+    (tok, cnt, est, overcount). The sketch is d={cms.D} rows × w={cms.W} buckets
     of exact BIGINT counters; est = min over rows of the token's bucket
     counter, so est >= cnt always and overcount isolates the collision
     error the bounded state buys."""
@@ -103,30 +88,14 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     topk = exact.orderBy(F.desc("cnt"), "tok").limit(_TOPK)
-    entries = toks.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("j"), _bucket_col(j).alias("b"))
-                    for j in range(_D)
-                ]
-            )
-        ).alias("e")
-    ).select("e.j", "e.b")
+    entries = toks.select(cms.entries(F.col("tok")).alias("e")).select(
+        "e.j", "e.b"
+    )
     sketch = entries.groupBy("j", "b").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
     probes = topk.select(
-        "tok",
-        "cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("j"), _bucket_col(j).alias("b"))
-                    for j in range(_D)
-                ]
-            )
-        ).alias("e"),
+        "tok", "cnt", cms.entries(F.col("tok")).alias("e")
     ).select("tok", "cnt", "e.j", "e.b")
     return (
         # bcast-audit: bounded (d*w = 64 sketch counters)

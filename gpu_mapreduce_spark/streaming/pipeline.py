@@ -11,7 +11,9 @@ Scale notes: the file source is a stand-in for Kafka/Kinesis — swap
 `readStream.format("parquet")` for the bus, everything downstream is
 unchanged. Watermarks bound state: the windowed aggregation keeps only
 windows younger than the watermark; the sessionizer uses per-key
-GroupState with a processing-time timeout so abandoned users are flushed.
+GroupState with a processing-time timeout so abandoned users are flushed;
+the funnel fold (funnel_stages_stream_buffered) keeps per-user stage
+timestamps plus event buffers pruned by reachability and the watermark.
 State volume ∝ active keys (windows/users in the lateness horizon), not
 stream length.
 """
@@ -214,8 +216,8 @@ def funnel_stages_batch(
     a stage not reached): the batch half of the funnel dual. Same chained
     ordered-window semantics as queries/funnel.event_funnel (which reduces
     this table to its one-row report); -1 sentinels instead of NULLs so the
-    streaming half's fixed-width state row and the oracle compare exactly
-    (the dedup_incremental sentinel discipline)."""
+    streaming half's rows and the oracle compare exactly (the
+    dedup_incremental sentinel discipline)."""
     ev = events.select(
         "user_id", "event_type", F.unix_millis("ts").alias("tms")
     )
@@ -261,105 +263,6 @@ def funnel_stages_batch(
     )
 
 
-def funnel_stages_stream(
-    events: DataFrame, conv_ms: int = FUNNEL_CONV_MS
-) -> DataFrame:
-    """Custom stateful streaming operator: the per-user funnel as an
-    applyInPandasWithState job with BOUNDED state — exactly three BIGINT
-    timestamps per user (t1, t2, t3; -1 = stage not reached), never an
-    event buffer. Each group call folds the batch's stage events together
-    with the prior state's timestamps; every state timestamp is a REAL
-    event's timestamp, so re-folding it with new events is always sound.
-    The fold is exact whenever a user's history arrives within one trigger
-    (the availableNow file drain this dual is equality-tested under — the
-    sessionize_stream delivery contract); on a multi-batch bus feed an
-    earlier-arriving view can open a conversion window whose clicks were
-    discarded in prior batches — funnel_stages_stream_buffered is the
-    event-buffer variant that recovers them (same fold, bigger state).
-
-    CHECKPOINT COMPATIBILITY (r08 change): the state schema grew from
-    (t1, t2, t3) to (t1, t2, t3, seq) and the output gained emit_seq.
-    Structured Streaming state is schema-pinned per checkpoint, so a
-    deployment restarting from a pre-r08 checkpoint fails state
-    deserialization — start the upgraded query from a NEW checkpoint
-    location (replaying the source) rather than the old one. Spark's
-    state store offers no in-place 3->4-field migration hook; the
-    alternative (versioned read tolerating 3-field state with seq=0)
-    is not expressible through applyInPandasWithState's single
-    stateStructType.
-
-    Every emitted row carries `emit_seq`, a per-user monotone counter held
-    in state: 'keep the LAST row per user' is then derivable from row
-    CONTENTS (max emit_seq) on any sink — append-mode file sinks guarantee
-    no cross-batch ordering, and a state regression (t2 reverting to -1
-    when an earlier view re-folds the bounded state) means recency is not
-    inferable from the timestamps themselves."""
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        rows = pd.concat(list(pdfs))
-        tms = rows["ts"].astype("int64") // 1_000_000  # pandas ns → ms
-        stage = {
-            s: tms[rows["event_type"] == s].tolist() for s in FUNNEL_STAGES
-        }
-        if state.exists:
-            *prior_list, seq = state.get
-            prior_state = tuple(prior_list)
-        else:
-            prior_state, seq = None, 0
-        if prior_state is not None:
-            for s, prior in zip(FUNNEL_STAGES, prior_state):
-                if prior >= 0:
-                    stage[s].append(prior)
-        t1 = min(stage[FUNNEL_STAGES[0]], default=-1)
-        t2 = min(
-            (
-                c
-                for c in stage[FUNNEL_STAGES[1]]
-                if t1 >= 0 and t1 < c <= t1 + conv_ms
-            ),
-            default=-1,
-        )
-        t3 = min(
-            (
-                p
-                for p in stage[FUNNEL_STAGES[2]]
-                if t2 >= 0 and t2 < p <= t2 + conv_ms
-            ),
-            default=-1,
-        )
-        new_state = (int(t1), int(t2), int(t3))
-        # Emit only when the tuple CHANGED (append mode re-emits forever
-        # otherwise: a multi-batch feed would yield one row per trigger for
-        # every sighted user). A user whose funnel evolves still emits one
-        # row per change, stamped with the next emit_seq.
-        emit = t1 >= 0 and new_state != prior_state
-        if emit:
-            seq += 1
-        state.update((*new_state, int(seq)))
-        if emit:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id], "t1": [t1], "t2": [t2],
-                    "t3": [t3], "emit_seq": [int(seq)],
-                }
-            )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=(
-            "user_id bigint, t1 bigint, t2 bigint, t3 bigint, emit_seq bigint"
-        ),
-        stateStructType="t1 bigint, t2 bigint, t3 bigint, seq bigint",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def _prune_buffers(
     t1: int,
     clicks: list[int],
@@ -392,12 +295,13 @@ def _prune_buffers(
 def funnel_stages_stream_buffered(
     events: DataFrame, conv_ms: int = FUNNEL_CONV_MS
 ) -> DataFrame:
-    """The funnel fold made exact under ARBITRARY cross-batch arrival
-    order: state buffers the stage-2/3 event timestamps that might yet
-    fall inside a conversion window, so an earlier-arriving view (a later
-    micro-batch delivering an older event) recovers clicks/purchases the
-    bounded 3-timestamp fold had already discarded — the delivery-model
-    fix drafted at queries/funnel_stream.py.
+    """Custom stateful streaming operator: the per-user funnel stage table
+    as an applyInPandasWithState fold, exact under ARBITRARY cross-batch
+    arrival order. State buffers the stage-2/3 event timestamps that might
+    yet fall inside a conversion window, so an earlier-arriving view (a
+    later micro-batch delivering an older event) recovers the clicks and
+    purchases that arrived before it. A fold holding only the three stage
+    timestamps would have discarded them.
 
     State = (t1, t2, t3, clicks[], purchases[], seq). The buffers are
     PRUNED by what could still matter, exploiting that t1 = min(views)
@@ -420,10 +324,14 @@ def funnel_stages_stream_buffered(
     with the horizon wired, a continuous feed of view-less users no
     longer accumulates unbounded click/purchase buffers (r08 ADVICE).
 
-    Emits on (t1, t2, t3) change with the same monotone emit_seq marker;
-    keep-max-emit_seq per user equals the batch chain on ANY feed order
-    (tests/test_streaming.py proves it on a time-reversed two-batch feed
-    that the bounded fold provably gets wrong)."""
+    Emits only when (t1, t2, t3) changed (append mode would otherwise
+    re-emit every sighted user on every trigger), each row stamped with
+    `emit_seq`, a per-user monotone counter held in state: 'keep the LAST
+    row per user' is then max emit_seq, derivable from row CONTENTS on any
+    sink (append-mode file sinks guarantee no cross-batch ordering).
+    Keep-max-emit_seq per user equals the batch chain on ANY feed order
+    (tests/test_streaming.py: one-trigger drain, time-ordered and
+    time-reversed two-batch feeds, a watermarked feed)."""
 
     def fn(
         key: tuple[Any, ...],

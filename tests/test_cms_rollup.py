@@ -16,11 +16,8 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from gpu_mapreduce_spark.queries.cms_rollup import (
-    _D,
-    _W,
-    cms_merge_rollup,
-)
+from gpu_mapreduce_spark.functions.cms import D as _D, W as _W
+from gpu_mapreduce_spark.queries.cms_rollup import cms_merge_rollup
 from gpu_mapreduce_spark.sources.tables import table
 from tests.conftest import SF_DIR
 

@@ -638,6 +638,17 @@ def test_jp_and_greedy_initial_size_is_observed(spark):
     ) == {"localCheckpoint": 7, "isEmpty": 1}
 
 
+def test_boruvka_pointer_jump_runs_no_probe_action(spark):
+    """boruvka_msf's pointer-jump loop observes each jump's moved count on
+    the jump's own checkpoint: one call on the hand graph runs no collect
+    action (the probe form collected once per jump)."""
+    _edges, wedges = _hand_graph(spark)
+    got = named_actions(
+        spark, "msf_actions", lambda: graph_iter.boruvka_msf(wedges), ("collect",)
+    )
+    assert got == {}, got
+
+
 def _hash_exchanges(df) -> int:
     df.collect()  # the adaptive plan is final once it has run
     return df._jdf.queryExecution().executedPlan().toString().count(

@@ -7,8 +7,9 @@ import math
 
 from pyspark.sql import functions as F
 
+from gpu_mapreduce_spark.functions.hllest import M as _M
 from gpu_mapreduce_spark.operators import dedup
-from gpu_mapreduce_spark.queries.hll import _M, hll_registers
+from gpu_mapreduce_spark.queries.hll import hll_registers
 from gpu_mapreduce_spark.sources.tables import table
 from tests.conftest import SF_DIR
 

@@ -17,6 +17,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from gpu_mapreduce_spark.functions.hllest import M as _M, RHO_MAX as _RHO_MAX
 from gpu_mapreduce_spark.functions.portable import (
     hash60,
     sql_uniform01,
@@ -24,7 +25,7 @@ from gpu_mapreduce_spark.functions.portable import (
 )
 from gpu_mapreduce_spark.operators import dedup, similarity
 from gpu_mapreduce_spark.operators.prefix import global_ranks_and_count
-from gpu_mapreduce_spark.queries.hll import _M, _RHO_MAX, hll_registers
+from gpu_mapreduce_spark.queries.hll import hll_registers
 
 _SETTINGS = dict(
     max_examples=10,

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
+
 from gpu_mapreduce_spark.functions import qsketch
 
 
@@ -194,3 +196,32 @@ def test_qsketch_small_inputs_exact():
     for x, want in ((0, 0), (1, 1), (3, 3), (5, 4), (9, 5)):
         assert sk.rank(x) == want
     assert sk.quantile(1, 2) == 3
+
+
+def test_partial_row_codec_round_trips():
+    """decode(encode(sk)) == sk for bulk builds and fold_tree outputs —
+    empty levels (below a bulk build's top, inside a folded sketch's
+    stack), odd leftovers and the empty sketch included — and a
+    counter row seen twice raises instead of folding a partial twice."""
+
+    class Row:
+        def __init__(self, g, kind, lvl, v):
+            self.g, self.kind, self.lvl, self.v = g, kind, lvl, v
+
+    def round_trip(sk):
+        rows = [Row(*r) for r in qsketch.encode(sk, 7)]
+        return qsketch.decode(rows, lambda r: r.g)[7]
+
+    data = _datasets(1000)["uniform"]
+    bulks = [qsketch.bulk_build(data[:n]) for n in (0, 1, 64, 65, 325, 1000)]
+    assert any(len(lv) % 2 for sk in bulks for lv in sk.levels)  # leftovers
+    assert any(not lv for sk in bulks for lv in sk.levels)  # empty levels
+    folded = qsketch.fold_tree(
+        [qsketch.bulk_build(data[150 * i : 150 * (i + 1)]) for i in range(5)]
+    )
+    assert any(not lv for lv in folded.levels[1:-1])
+    for sk in [*bulks, folded]:
+        assert round_trip(sk) == sk
+    rows = [Row(*r) for r in qsketch.encode(bulks[1], 0)]
+    with pytest.raises(ValueError, match="ingested twice"):
+        qsketch.decode(rows + rows[-1:], lambda r: r.g)

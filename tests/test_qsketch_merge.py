@@ -143,9 +143,9 @@ def test_qsketch_stream_equals_batch_and_guards_duplicates(spark):
 
     dup = [Row(0, "s", 0, 5), Row(0, "c", 0, 0), Row(0, "c", 0, 0)]
     with pytest.raises(ValueError, match="ingested twice"):
-        qs._rebuild_unique(dup)
+        qs._slots(dup)
     with pytest.raises(ValueError, match="out-of-range"):
-        qs._rebuild_unique([Row(qm.P, "c", 0, 0)])
+        qs._slots([Row(qm.P, "c", 0, 0)])
 
 
 def test_oracle_closed_form_group_build_hand_input():

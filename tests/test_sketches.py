@@ -21,3 +21,28 @@ def test_cms_one_sided_error_and_collisions(spark):
     # ranked by exact count desc, token asc
     keys = [(-r.cnt, r.tok) for r in rows]
     assert keys == sorted(keys)
+
+
+def test_sketch_layouts_are_written_only_in_functions():
+    """Each mergeable-state layout has one definition: the HLL register
+    derivation (bin() of the hash tail) lives in functions/hllest.py, the
+    count-min bucket hash (the 'cms{j}|' prefix) in functions/cms.py, and
+    QSketch objects are built only by functions/qsketch.py (bulk_build,
+    merge, decode)."""
+    import re
+    from pathlib import Path
+
+    import gpu_mapreduce_spark
+
+    root = Path(gpu_mapreduce_spark.__file__).parent
+
+    def writers(pattern: str) -> list[str]:
+        return sorted(
+            p.relative_to(root).as_posix()
+            for p in root.rglob("*.py")
+            if re.search(pattern, p.read_text())
+        )
+
+    assert writers(r"\bbin\(") == ["functions/hllest.py"]
+    assert writers(r"cms\{j\}\|") == ["functions/cms.py"]
+    assert writers(r"QSketch\(") == ["functions/qsketch.py"]

@@ -171,12 +171,14 @@ def test_checkpointed_restart_is_exactly_once(spark, tmp_path):
 
 
 def test_funnel_stream_equals_batch(spark):
-    """Bounded-state custom funnel (three BIGINT timestamps per user,
-    applyInPandasWithState): with availableNow draining the file in one
-    trigger, the per-user stage table must equal the batch chain exactly —
-    including users stalled mid-funnel (t2/t3 = -1 sentinels)."""
+    """Custom stateful funnel (applyInPandasWithState): with availableNow
+    draining the file in one trigger, the per-user stage table must equal
+    the batch chain exactly — including users stalled mid-funnel (t2/t3 =
+    -1 sentinels)."""
     batch = pipeline.funnel_stages_batch(table(spark, SF_DIR, "events"))
-    stream = pipeline.funnel_stages_stream(pipeline.events_stream(spark, SF_DIR))
+    stream = pipeline.funnel_stages_stream_buffered(
+        pipeline.events_stream(spark, SF_DIR)
+    )
     got = pipeline.run_stream_to_memory(
         stream, "t_funnel", spark, output_mode="append"
     )
@@ -194,11 +196,8 @@ def test_funnel_stream_multibatch_emits_only_on_change(spark, tmp_path):
     """Two time-ordered microbatches (maxFilesPerTrigger=1): a user whose
     state tuple does not change in a batch must NOT re-emit (the r06
     append-mode duplicate bug), and keep-LAST-row-per-user must equal the
-    batch chain over the union. Time-ordered delivery is exactly the
-    model where the 3-timestamp fold is exact (a batch-1 click precedes
-    any batch-2 view, so it can never fall inside that view's forward
-    conversion window) — the caveat at funnel_stages_stream covers
-    out-of-order feeds."""
+    batch chain over the union. Out-of-order feeds are covered by
+    test_funnel_buffered_recovers_out_of_order_batches."""
     import time as _time
 
     from pyspark.sql import functions as F
@@ -213,7 +212,7 @@ def test_funnel_stream_multibatch_emits_only_on_change(spark, tmp_path):
     _time.sleep(1.1)  # file-source batches order by modification time
     ev.filter(F.col("ts") > cut).coalesce(1).write.mode("append").parquet(d)
 
-    stream = pipeline.funnel_stages_stream(
+    stream = pipeline.funnel_stages_stream_buffered(
         spark.readStream.schema(pipeline.EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(d)
@@ -244,12 +243,11 @@ def test_funnel_stream_multibatch_emits_only_on_change(spark, tmp_path):
 def test_funnel_buffered_recovers_out_of_order_batches(spark, tmp_path):
     """Adversarial cross-batch delivery: batch 1 is the LATER half of the
     timeline (a user's clicks/purchases arrive before any of their views),
-    batch 2 the EARLIER half. The bounded 3-timestamp fold provably loses
-    conversions — a click discarded while t1 = -1 cannot be recovered when
-    the earlier view arrives — while the buffered fold's watermark-horizon
-    event buffer recovers them: keep-max-emit_seq per user must equal the
-    batch chain exactly. emit_seq (not sink order) defines 'last', per the
-    unordered-sink contract."""
+    batch 2 the EARLIER half. A click that arrives while t1 = -1 must be
+    kept until the earlier view arrives — a fold holding only the three
+    stage timestamps would discard it — so keep-max-emit_seq per user must
+    equal the batch chain exactly. emit_seq (not sink order) defines
+    'last', per the unordered-sink contract."""
     import time as _time
 
     from pyspark.sql import functions as F
@@ -258,53 +256,38 @@ def test_funnel_buffered_recovers_out_of_order_batches(spark, tmp_path):
     # cut EARLY (2%), like the ordered multibatch test: conversion windows
     # are 24 h, so only a cut near the start leaves windows STRADDLING the
     # batch boundary — a view just before the cut whose click lands after
-    # it. Reversed delivery then forces the bounded fold to discard that
-    # click (no view seen yet) with no way back.
-    cut = ev.agg(F.expr("percentile_approx(ts, 0.02)").alias("m")).collect()[0].m
+    # it, delivered click first.
+    cut, cut_ms = (
+        ev.agg(F.expr("percentile_approx(ts, 0.02)").alias("m"))
+        .select("m", F.unix_millis("m"))
+        .collect()[0]
+    )
     d = str(tmp_path / "feed")
     ev.filter(F.col("ts") > cut).coalesce(1).write.parquet(d)  # LATE half 1st
     _time.sleep(1.1)  # file-source batch order = modification time
     ev.filter(F.col("ts") <= cut).coalesce(1).write.mode("append").parquet(d)
 
-    def run(build, name):
-        stream = build(
-            spark.readStream.schema(pipeline.EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(d)
-        )
-        got = pipeline.run_stream_to_memory(
-            stream, name, spark, output_mode="append"
-        )
-        last = {}
-        for r in got.collect():
-            if r.user_id not in last or r.emit_seq > last[r.user_id][0]:
-                last[r.user_id] = (r.emit_seq, r.t1, r.t2, r.t3)
-        return {u: v[1:] for u, v in last.items()}
-
-    buffered = run(pipeline.funnel_stages_stream_buffered, "t_funnel_buf")
-    bounded = run(pipeline.funnel_stages_stream, "t_funnel_oo_bounded")
+    stream = pipeline.funnel_stages_stream_buffered(
+        spark.readStream.schema(pipeline.EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(d)
+    )
+    got = pipeline.run_stream_to_memory(
+        stream, "t_funnel_buf", spark, output_mode="append"
+    )
+    last = {}
+    for r in got.collect():
+        if r.user_id not in last or r.emit_seq > last[r.user_id][0]:
+            last[r.user_id] = (r.emit_seq, r.t1, r.t2, r.t3)
     want = {
         r.user_id: (r.t1, r.t2, r.t3)
         for r in pipeline.funnel_stages_batch(ev).collect()
     }
-    assert buffered == want
-    # the feed must actually be adversarial: the bounded fold gets at
-    # least one user wrong on it (otherwise this test proves nothing)
-    assert bounded != want
-
-
-def test_funnel_buffered_equals_bounded_on_ordered_feed(spark):
-    """On the single-trigger drain (every event in one batch) the buffered
-    fold must be a drop-in for the bounded one: identical stage table."""
-    batch = pipeline.funnel_stages_batch(table(spark, SF_DIR, "events"))
-    stream = pipeline.funnel_stages_stream_buffered(
-        pipeline.events_stream(spark, SF_DIR)
-    )
-    got = pipeline.run_stream_to_memory(
-        stream, "t_funnel_buf_one", spark, output_mode="append"
-    )
-    cols = ["user_id", "t1", "t2", "t3"]
-    assert _rows(got, cols) == _rows(batch, cols)
+    assert {u: v[1:] for u, v in last.items()} == want
+    # the feed must actually be adversarial: some conversion window
+    # straddles the cut, so its click (ts > cut, batch 1) is delivered
+    # before its view (ts <= cut, batch 2); otherwise this proves nothing
+    assert any(t1 <= cut_ms < t2 for t1, t2, _ in want.values())
 
 
 def test_prune_buffers_unit():

@@ -1135,7 +1135,7 @@ def main() -> None:
             return n
 
         workloads = [
-            ("funnel_stream", lambda src: sp.funnel_stages_stream(src), "append"),
+            ("funnel_stream", sp.funnel_stages_stream_buffered, "append"),
             (
                 "windowed_stream",
                 lambda src: sp.windowed_counts(src, with_watermark=True),
