@@ -290,6 +290,26 @@ def test_funnel_buffered_recovers_out_of_order_batches(spark, tmp_path):
     assert any(t1 <= cut_ms < t2 for t1, t2, _ in want.values())
 
 
+def test_funnel_buffered_equals_bounded_on_ordered_feed(spark):
+    """On the single-trigger drain (every event in one batch) the buffered
+    fold must be a drop-in for a bounded 3-timestamp fold: one row per
+    funnel entrant, emitted once (emit_seq 1, no buffer-driven re-emits),
+    and the identical stage table."""
+    batch = pipeline.funnel_stages_batch(table(spark, SF_DIR, "events"))
+    stream = pipeline.funnel_stages_stream_buffered(
+        pipeline.events_stream(spark, SF_DIR)
+    )
+    got = pipeline.run_stream_to_memory(
+        stream, "t_funnel_buf_one", spark, output_mode="append"
+    )
+    rows = got.collect()
+    assert rows, "fixture must produce funnel entrants"
+    assert {r.emit_seq for r in rows} == {1}
+    assert len({r.user_id for r in rows}) == len(rows)
+    cols = ["user_id", "t1", "t2", "t3"]
+    assert sorted(tuple(r[c] for c in cols) for r in rows) == _rows(batch, cols)
+
+
 def test_prune_buffers_unit():
     """Pure-fold contract of the buffered funnel's state pruning: the
     t1-window rules with a view, the watermark horizon (wm - 2*conv)
